@@ -72,16 +72,6 @@ def shingle_hashes(text: str | Column, k: int = 3) -> Column:
     )
 
 
-def word_shingles(text: str | Column, k: int = 3) -> Column:
-    """Distinct k-word shingles as an array of STRINGS (debug/inspection
-    surface; the pipeline itself stays on int hashes throughout)."""
-    toks = tokens(text)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    shingle_at = lambda i: F.array_join(F.slice(toks, i + 1, k), " ")  # noqa: E731
-    return F.array_distinct(F.transform(idx, shingle_at))
-
-
 def _hash_family(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a_i, b_i) multiply-add coefficients."""
     rng = random.Random(seed)
@@ -169,19 +159,6 @@ def kmv_jaccard(
     m = F.slice(F.array_sort(union), 1, max_set_size)
     inter = F.size(F.array_intersect(F.array_intersect(m, a), b))
     return F.try_divide(inter.cast("double"), F.size(m).cast("double"))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """(id, minhash[num_hashes]) — signature-only surface."""
-    return signatures_and_sets(df, text_col, id_col, k, num_hashes).select(
-        id_col, "minhash"
-    )
 
 
 def band_table(

@@ -12,8 +12,11 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.column import Column
 
 from ..functions.text import tokens
+from .cells import celled_base
+from .simhash import BITS_MD5, md5_60, vote_fold
 
 
 def jaccard_pairs_blocked(
@@ -45,6 +48,12 @@ def jaccard_pairs_blocked(
     [n·t, n/t] and provably lose nothing. Containment-style duplication
     is the asymmetric operator's job (queries_adv.containment_pairs).
     Returns (id_a, id_b, jaccard).
+
+    The edge set is the UNBLOCKED definition: every within-block pair
+    that passes the length band and the threshold. It differs on
+    purpose from the near_dup_clusters family, whose edges are this set
+    restricted to simhash cells (``jaccard_pairs_celled``);
+    near_dup_blocking_recall measures the gap.
 
     ``build`` picks the join strategy — both produce identical pairs:
 
@@ -292,48 +301,22 @@ def _hashed_token_base(df: DataFrame, text_col: str, id_col: str, block_cols):
 # TRUE edge set itself is Θ(|block|²) (1.53 M pairs over 5 000 docs) and the
 # 40× deep capture OOM'd the pair aggregate (r11 adjudication). The fix is
 # the knn_graph playbook: a closed-form cell both engines evaluate bounds
-# the scored-pair mass at Σ|cell|² ≈ n · target_cell — LINEAR — and the
-# oracle mirrors the blocking bit-for-bit. The cell is the leading ``b``
-# bits of a SET-simhash (majority vote over the DISTINCT token hashes, so
-# identical token sets ⇒ identical fingerprint ⇒ same cell: J = 1 pairs are
-# co-celled with probability 1, the structural guarantee dedup needs).
-# Graded recall decays with J and is MEASURED, not assumed
-# (near_dup_blocking_recall) — the honest-floor policy knn_graph set.
-CELL_TARGET = 64
-CELL_MIN_BITS = 3
-CELL_MAX_BITS = 18
-_FP_BITS = 60  # md5-prefix width shared with simhash.BITS_MD5
+# the scored-pair mass linearly, and the oracle mirrors the blocking
+# bit-for-bit (the cell rule lives in dedup/cells.py). The fingerprint is a
+# SET-simhash (majority vote over the DISTINCT token hashes, so identical
+# token sets ⇒ identical fingerprint ⇒ same cell: J = 1 pairs are co-celled
+# with probability 1, the structural guarantee dedup needs). Graded recall
+# decays with J and is MEASURED, not assumed (near_dup_blocking_recall) —
+# the honest-floor policy knn_graph set.
 
 
-def _cell_fp_col(text_col: str):
-    """60-bit SET-simhash over md5-prefix token hashes — byte-portable
-    to DuckDB (same hash as simhash.md5_60, but votes are per DISTINCT
-    token so the fingerprint is a function of the token SET, matching
-    the Jaccard the cells block for)."""
-    hashes = F.transform(
-        F.array_distinct(tokens(text_col)),
-        lambda t: F.conv(
-            F.substring(F.md5(t.cast("binary")), 1, 15), 16, 10
-        ).cast("bigint"),
-    )
-    fold = (
-        f"aggregate(sequence(0, {_FP_BITS - 1}), 0L, "
-        "(acc, i) -> acc | IF("
-        "2 * size(filter(__h, h -> (h >> i) & 1 = 1)) > size(__h), "
-        "shiftleft(1L, i), 0L))"
-    )
-    return hashes, fold
-
-
-def cell_bits(n: int, target_cell: int = CELL_TARGET) -> int:
-    """b = clamp(ceil(log2(n / target_cell)), 3, 18) — cell granularity
-    grows with the corpus so expected cell size stays ~constant at every
-    scale (knngraph.blocking_bits_expr, set flavor). Computed driver-side
-    from ONE count so the fingerprint pass carries a literal shift."""
-    return min(
-        CELL_MAX_BITS,
-        max(CELL_MIN_BITS, math.ceil(math.log2(max(n, 1) / float(target_cell)))),
-    )
+def set_simhash_hashes(text_col: str) -> Column:
+    """Input of the SET-simhash: the md5-prefix hashes of the DISTINCT
+    tokens (simhash.md5_60 — byte-portable to DuckDB). Fold it with
+    ``simhash.vote_fold(…, BITS_MD5)``: votes are per distinct token,
+    so the fingerprint is a function of the token SET, matching the
+    Jaccard the cells block for."""
+    return md5_60(F.array_distinct(tokens(text_col)))
 
 
 def jaccard_pairs_celled(
@@ -343,7 +326,6 @@ def jaccard_pairs_celled(
     block_cols: tuple[str, ...] = ("lang",),
     length_tolerance: float | None = 0.2,
     threshold: float = 0.35,
-    target_cell: int = CELL_TARGET,
     set_repr: str = "auto",
 ) -> DataFrame:
     """Exact token-set Jaccard restricted to SIMHASH CELLS — the
@@ -352,12 +334,12 @@ def jaccard_pairs_celled(
     Same verification as ``jaccard_pairs_blocked`` (same set_repr probe,
     same length tolerance, same threshold), but a pair additionally
     requires ``cell_a == cell_b`` where cell = the leading b bits of the
-    portable set-simhash and b adapts to the corpus size. Scored mass is
-    Σ|cell|² ≈ n · target_cell; the join is a plain (blocks…, cell)
-    equi-join — key cardinality 2^b restores shuffle parallelism that
-    lang-only blocks never had, and AQE skew-join splits an oversized
-    cell. NULL-text docs carry no fingerprint and emit no pair (the
-    simhash rule)."""
+    portable set-simhash and b adapts to the corpus size
+    (dedup/cells.py). The join is a plain (blocks…, cell) equi-join —
+    key cardinality 2^b restores shuffle parallelism that lang-only
+    blocks never had, and AQE skew-join splits an oversized cell.
+    NULL-text docs carry no fingerprint and emit no pair (the simhash
+    rule)."""
     if set_repr == "array":
         vocab = None
     else:
@@ -367,13 +349,10 @@ def jaccard_pairs_celled(
                 "set_repr='bitmask' requires a ≤63-token corpus vocabulary"
             )
 
-    nn = df.filter(F.col(text_col).isNotNull())
-    b = cell_bits(nn.count(), target_cell)
-
     from ..parallelism import fan_out
 
-    nn = fan_out(nn)  # the md5+fold fingerprint pass is CPU-dominant
-    hashes, fold = _cell_fp_col(text_col)
+    # the md5+fold fingerprint pass is CPU-dominant
+    nn = fan_out(df.filter(F.col(text_col).isNotNull()))
     if vocab is not None:
         toks_repr = _bitmask_repr(vocab, text_col)
         n_expr = F.bit_count("toks")
@@ -382,19 +361,22 @@ def jaccard_pairs_celled(
             F.array_distinct(tokens(text_col)), lambda t: F.xxhash64(t)
         )
         n_expr = F.size("toks")
-    base = (
-        nn.select(
-            F.col(id_col).alias("id"),
-            *[F.col(c) for c in block_cols],
-            toks_repr.alias("toks"),
-            hashes.alias("__h"),
-        )
-        .withColumn("n_toks", n_expr.cast("int"))
-        .withColumn(
-            "cell",
-            F.shiftrightunsigned(F.expr(fold), _FP_BITS - b).cast("bigint"),
-        )
-        .drop("__h")
+    hashed = nn.select(
+        F.col(id_col).alias("id"),
+        *[F.col(c) for c in block_cols],
+        toks_repr.alias("toks"),
+        set_simhash_hashes(text_col).alias("__h"),
+    )
+    base = celled_base(
+        hashed.select(
+            "id",
+            *block_cols,
+            "toks",
+            n_expr.cast("int").alias("n_toks"),
+            vote_fold("__h", BITS_MD5).alias("__fp"),
+        ),
+        "__fp",
+        BITS_MD5,
     )
 
     if length_tolerance is None:

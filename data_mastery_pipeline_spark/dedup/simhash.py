@@ -31,6 +31,16 @@ BITS = 64
 BITS_MD5 = 60
 
 
+def md5_60(toks: Column) -> Column:
+    """Per-token 60-bit hashes from the md5 hex prefix (``BITS_MD5``)."""
+    return F.transform(
+        toks,
+        lambda t: F.conv(
+            F.substring(F.md5(t.cast("binary")), 1, 15), 16, 10
+        ).cast("bigint"),
+    )
+
+
 def _token_hashes(text_col: str | Column, hash_fn: str) -> tuple[Column, int]:
     """Array of per-token hashes (duplicates preserved — each
     occurrence votes) and the usable bit width."""
@@ -38,16 +48,23 @@ def _token_hashes(text_col: str | Column, hash_fn: str) -> tuple[Column, int]:
     if hash_fn == "xxhash64":
         return F.transform(toks, lambda t: F.xxhash64(t)), BITS
     if hash_fn == "md5_60":
-        return (
-            F.transform(
-                toks,
-                lambda t: F.conv(
-                    F.substring(F.md5(t.cast("binary")), 1, 15), 16, 10
-                ).cast("bigint"),
-            ),
-            BITS_MD5,
-        )
+        return md5_60(toks), BITS_MD5
     raise ValueError(f"hash_fn must be 'xxhash64' or 'md5_60', got {hash_fn!r}")
+
+
+def vote_fold(hashes: str, bits: int) -> Column:
+    """The SimHash majority vote over the hash-array column ``hashes``:
+    bit i (< ``bits``) is 1 iff more than half of the hashes have it
+    set. A per-row fold — ``aggregate`` over bit indices,
+    ``filter``/``size`` for the vote count — so no explode and no
+    shuffle. The sign bit is safe: ``shiftleft(1L, 63)`` wraps to
+    Long.MIN_VALUE and is combined with OR, never addition."""
+    return F.expr(
+        f"aggregate(sequence(0, {bits - 1}), 0L, "
+        "(acc, i) -> acc | IF("
+        f"2 * size(filter({hashes}, h -> (h >> i) & 1 = 1)) > size({hashes}), "
+        "shiftleft(1L, i), 0L))"
+    )
 
 
 def simhash_fingerprints(
@@ -67,21 +84,13 @@ def simhash_fingerprints(
     explode + per-doc bit-count aggregate. The earlier exploded form
     shuffled one row per token occurrence just to count bits of values
     that never leave their row; at 100 TB that was the pipeline's only
-    data-sized shuffle (banding shuffles 64-bit fingerprints). The
-    sign bit is safe: ``shiftleft(1L, 63)`` wraps to Long.MIN_VALUE and
-    is combined with OR, never addition."""
+    data-sized shuffle (banding shuffles 64-bit fingerprints)."""
     from ..parallelism import fan_out
 
     # the per-row 60/64-bit vote fold is CPU-dominant — guard against
     # low-split sources serializing it (see parallelism.fan_out)
     df = fan_out(df)
     hashes, bits = _token_hashes(text_col, hash_fn)
-    fp_expr = (
-        f"aggregate(sequence(0, {bits - 1}), 0L, "
-        "(acc, i) -> acc | IF("
-        "2 * size(filter(__h, h -> (h >> i) & 1 = 1)) > size(__h), "
-        "shiftleft(1L, i), 0L))"
-    )
     # NULL-text docs are EXCLUDED (review r6, 11th pass): tokens(NULL)
     # is NULL, and under ANSI the vote IF() then takes the 0L branch on
     # every bit — all null-text docs would share fp=0, band together,
@@ -90,7 +99,7 @@ def simhash_fingerprints(
     return (
         df.filter(F.col(text_col).isNotNull())
         .select(F.col(id_col), hashes.alias("__h"))
-        .select(F.col(id_col), F.expr(fp_expr).alias("fp"))
+        .select(F.col(id_col), vote_fold("__h", bits).alias("fp"))
     )
 
 

@@ -1,4 +1,4 @@
-"""Date/time scalar functions D1-D14 (SURVEY §2.C).
+"""Date/time scalar functions (SURVEY §2.C: D1-D7, D11, D14).
 
 Every function the reference uses maps to a native Spark function
 (silver_processor.py:235-241, schema.sql:106,151-153,245-264,
@@ -31,34 +31,9 @@ def time_parts(df: DataFrame, ts_col: str, parts: list[str] | None = None) -> Da
     return df.withColumns({p: TIME_PART_FNS[p](F.col(ts_col)) for p in parts})
 
 
-def iso_to_timestamp(col: str | Column) -> Column:
-    """D8 — ISO-8601 string → timestamp (silver_processor.py:170-174)."""
-    return F.to_timestamp(col)
-
-
-def epoch_to_timestamp(col: str | Column) -> Column:
-    """D9 — epoch seconds → timestamp (weather_producer.py:107,120-121)."""
-    return F.timestamp_seconds(col)
-
-
-def to_date_trunc(col: str | Column) -> Column:
-    """D10 — DATE(ts) truncation (schema.sql:245,251)."""
-    return F.to_date(col)
-
-
 def make_date(y: Column, m: Column, d: Column) -> Column:
     """D11 — construct a date from parts (schema.sql:106)."""
     return F.make_date(y, m, d)
-
-
-def make_hour_timestamp(y: Column, m: Column, d: Column, h: Column) -> Column:
-    """D12 — construct an hour-grain timestamp (schema.sql:151-153)."""
-    return F.make_timestamp(y, m, d, h, F.lit(0), F.lit(0))
-
-
-def retention_cutoff(days: int) -> Column:
-    """D13 — ``now() - INTERVAL days`` retention boundary (schema.sql:264)."""
-    return F.current_timestamp() - F.expr(f"INTERVAL {int(days)} DAYS")
 
 
 def duration_seconds(start: str | Column, end: str | Column) -> Column:

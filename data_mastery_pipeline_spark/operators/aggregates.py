@@ -109,15 +109,6 @@ def group_by_expression(
     return df.groupBy(*named).agg(*aggs)
 
 
-def distinct_count(df: DataFrame, col: str, approx: bool = False, alias: str | None = None) -> DataFrame:
-    """A5 — COUNT(DISTINCT col) (schema.sql:305-306); ``approx=True`` swaps
-    in HLL ``approx_count_distinct`` — the 100 TB path (one pass, no
-    distinct shuffle explosion)."""
-    alias = alias or f"n_distinct_{col}"
-    fn = F.approx_count_distinct if approx else F.count_distinct
-    return df.agg(fn(F.col(col)).alias(alias))
-
-
 def duplicate_groups(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """A7 — key groups appearing more than once
     (GROUP BY ... HAVING COUNT(*) > 1, weather_pipeline_dag.py:193-198)."""

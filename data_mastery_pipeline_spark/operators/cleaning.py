@@ -1,11 +1,9 @@
-"""Cleaning operators — casts, null/range filters, dedup, quality score.
+"""Cleaning operators — null/range filters, dedup, quality score.
 
 Generalizes the reference's Silver-stage cleaning (SURVEY §2.B):
-  P1 type-cast projection        (silver_processor.py:170-174)
   P2 null-rejection filter       (silver_processor.py:177-182)
   P3 range predicate             (silver_processor.py:185-188)
   P4 column-subset dedup         (silver_processor.py:191)
-  P5 constant/metadata columns   (silver_processor.py:195,290,304)
   P6 chained conditional scoring (silver_processor.py:203-220)
   S14 idempotent anti-join upsert (gold_loader.py:296-319)
 
@@ -23,15 +21,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
-
-
-def cast_columns(df: DataFrame, casts: dict[str, str]) -> DataFrame:
-    """P1 — cast named columns to target types (e.g. ISO string → timestamp).
-
-    Reference casts 4 string columns to timestamp (silver_processor.py:
-    170-174); generalized to any {column: typeName} mapping.
-    """
-    return df.withColumns({c: F.col(c).cast(t) for c, t in casts.items()})
 
 
 def drop_null_rows(df: DataFrame, required: Sequence[str]) -> DataFrame:
@@ -55,12 +44,6 @@ def range_filter(df: DataFrame, column: str, lo: float, hi: float) -> DataFrame:
     return df.filter(F.col(column).between(lo, hi))
 
 
-def dedup_keep_any(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """P4 — drop duplicate rows on a key subset, keeping an arbitrary row
-    (reference semantics, silver_processor.py:191)."""
-    return df.dropDuplicates(list(keys))
-
-
 def dedup_deterministic(
     df: DataFrame,
     keys: Sequence[str],
@@ -79,14 +62,6 @@ def dedup_deterministic(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def with_metadata(df: DataFrame, level: str | None = None, ts_col: str = "processing_timestamp") -> DataFrame:
-    """P5 — stamp processing metadata (silver_processor.py:195,290,304)."""
-    out = df.withColumn(ts_col, F.current_timestamp())
-    if level is not None:
-        out = out.withColumn("aggregation_level", F.lit(level))
-    return out
 
 
 def quality_score(

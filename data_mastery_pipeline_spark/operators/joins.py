@@ -27,23 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
 
-def equi_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | Sequence[str] | Column,
-    how: str = "inner",
-    broadcast_dim: bool = True,
-) -> DataFrame:
-    """Equi join with explicit broadcast of the small side.
-
-    AQE converts to broadcast at runtime when stats allow, but for known
-    dimension tables we declare it (F.broadcast) so the plan is stable at
-    any scale factor.
-    """
-    right = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(right, on=on, how=how)
-
-
 def semi_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
     """EXISTS — rows of left with a match in right; right's columns dropped."""
     return left.join(right, on=on, how="left_semi")

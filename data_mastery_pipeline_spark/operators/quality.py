@@ -83,15 +83,6 @@ def check_quality(
     )
 
 
-def apply_retention(df: DataFrame, ts_col: str, cutoff: Column) -> DataFrame:
-    """Q7 — retention/TTL filter (cleanup_old_data, schema.sql:259-286).
-
-    As a rewrite this is `filter(ts >= cutoff)`; on a partitioned table the
-    same predicate on the partition column prunes whole partitions (the
-    Spark-native analog of the reference's DELETE + partition drop)."""
-    return df.filter(F.col(ts_col) >= cutoff)
-
-
 def with_observed_metrics(
     df: DataFrame,
     name: str = "metrics",

@@ -46,14 +46,6 @@ def affine_gate(id_col: str, salt: int = 0) -> Column:
     )
 
 
-def sample_by_gate(
-    df: DataFrame, fraction: float, gate: Column
-) -> DataFrame:
-    """Keep rows whose gate falls under ``fraction`` — deterministic,
-    repartition-stable, incremental-arrival-stable."""
-    return df.filter(gate < int(round(fraction * GATE_BUCKETS)))
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str,

@@ -42,11 +42,6 @@ def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
 
 
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    """EXCEPT ALL (bag semantics) — ∅ in reference, engine-native."""
-    return a.exceptAll(b)
-
-
 def top_k(df: DataFrame, order_by: Sequence[Column], k: int) -> DataFrame:
     """O1+O2 — global top-k: orderBy + limit, planned as
     TakeOrderedAndProject (no full sort, no single-task shuffle)."""

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .dedup import cells
 from .registry import quantize, query
 from .streaming import core
 from .tables import load_table
@@ -1163,10 +1164,10 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Portable sign-LSH blocking for the kNN-graph pair (knn_graph /
 # knn_graph_recall): bit j of the pool is (v[j] > 0), the cell keeps
-# the b = clamp(ceil(log2(n/64)), 3, 18) leading bits. Pure
-# comparisons + integer adds + exact double arithmetic (< 2^32) — the
-# ONE blocking family both engines evaluate bit-identically, which is
-# what lets the oracle value-hash the full blocked pipeline. Kept in
+# the b leading bits, b from the shared width rule (dedup/cells.py).
+# Pure comparisons + integer adds + exact double arithmetic (< 2^32) —
+# the ONE blocking family both engines evaluate bit-identically, which
+# is what lets the oracle value-hash the full blocked pipeline. Kept in
 # lockstep with similarity/knngraph.py (test_knngraph pins equality).
 _KNN_SIGN_TERMS = " + ".join(
     f"(CASE WHEN v[{j + 1}] > 0 THEN {1 << j} ELSE 0 END)" for j in range(32)
@@ -1176,8 +1177,7 @@ _KNN_CELLED_SQL = f"""
         SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
     ),
     nb AS (
-        SELECT least(18, greatest(3,
-                   CAST(ceil(log2(count(*) / 64.0)) AS INT))) AS b
+        SELECT {cells.cell_bits_sql()} AS b
         FROM base
     ),
     celled AS (
@@ -1248,7 +1248,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, "embeddings", sf_dir)
     return knngraph.blocked_knn_graph(
-        emb, id_col="vec_id", vec_col="embedding", k=3, target_cell=64
+        emb, id_col="vec_id", vec_col="embedding", k=3
     )
 
 
@@ -1304,13 +1304,12 @@ def knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity (per-bit miss prob is θ/π → 0 as cos → 1; exact
     duplicates are co-celled with probability 1), which is the regime
     embedding-dedup graphs actually operate in; the knob is
-    target_cell (bigger cells = higher recall = proportional mass)."""
+    cells.TARGET_CELL (bigger cells = higher recall = proportional
+    mass)."""
     from .similarity import knngraph
 
     emb = load_table(spark, "embeddings", sf_dir)
-    celled = knngraph.with_sign_cells(
-        emb, id_col="vec_id", vec_col="embedding", target_cell=64
-    )
+    celled = knngraph.with_sign_cells(emb, id_col="vec_id", vec_col="embedding")
     probes = celled.filter(F.col("id") < 64).select(
         F.col("id").alias("qid"),
         F.col("v").alias("qv"),

@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .dedup import cells
 from .dedup import components as dedup_components
 from .dedup import exact as dedup_exact
 from .dedup import embedding as dedup_emb
@@ -229,7 +230,9 @@ def exact_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram/token-set Jaccard near-dup pairs with deterministic
     (lang, length) blocking — the exact, oracle-checkable twin of the
-    MinHash path."""
+    MinHash path. Its edge set is the unblocked definition and differs
+    on purpose from the cell-restricted edges of the near_dup_clusters
+    family (see _SQL_CELLED_BASE)."""
     docs = load_table(spark, "documents", sf_dir)
     pairs = dedup_ngram.jaccard_pairs_blocked(
         docs, block_cols=("lang",), length_tolerance=0.2, threshold=0.35
@@ -281,15 +284,23 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", quantize(F.col("jaccard"), "jaccard", 4))
 
 
+def _sql_vote_fold(indent: str) -> tuple[str, str]:
+    """DuckDB twin of simhash.vote_fold over 60-bit hashes ``h``: the
+    per-bit vote counts (one select-list item per line, joined at
+    ``indent``) for a per-doc GROUP BY that also yields n = count(*),
+    and the fingerprint expression over them."""
+    bits = range(dedup_simhash.BITS_MD5)
+    csum = f",\n{indent}".join(f"sum((h >> {i}) & 1) AS c{i}" for i in bits)
+    fp = " + ".join(f"(CASE WHEN c{i}*2 > n THEN {1 << i} ELSE 0 END)" for i in bits)
+    return csum, fp
+
+
 def _sql_simhash_pairs(radius: int) -> str:
     """DuckDB twin of the md5-portable SimHash pipeline: same 60-bit
     md5-prefix token hash, same majority-vote fingerprint, all pairs
     with popcount(xor) ≤ radius — bit-identical to the Spark side, so
     the driver's value-hash compares the COMPLETE pair set."""
-    csum = ",\n             ".join(
-        f"sum((h >> {i}) & 1) AS c{i}" for i in range(60)
-    )
-    fp = " + ".join(f"(CASE WHEN c{i}*2 > n THEN {1 << i} ELSE 0 END)" for i in range(60))
+    csum, fp = _sql_vote_fold(" " * 13)
     return rf"""
     WITH tok AS (
       -- null-text docs excluded, mirroring the Spark fingerprint
@@ -903,20 +914,14 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # here is 0.78 ⇒ the TRUE edge set is Θ(|block|²)); the r11 40× deep
 # capture OOM'd its pair aggregate and was adjudicated as the engine's
 # one remaining scale-killer. The blocked definition bounds the scored
-# mass at Σ|cell|² ≈ n · CELL_TARGET (linear) via a closed-form cell
-# both engines evaluate bit-identically: the leading b bits of the
-# md5-portable SET-simhash (majority vote over DISTINCT token hashes —
-# identical token sets ⇒ identical fingerprints ⇒ co-celled with
-# probability 1, the structural exact-duplicate guarantee), with
-# b = clamp(ceil(log2(n / CELL_TARGET)), 3, 18) so expected cell size is
-# constant at every scale. Graded recall decays with J and is MEASURED
+# mass linearly via a closed-form cell both engines evaluate
+# bit-identically (width rule and stamp: dedup/cells.py): the leading b
+# bits of the md5-portable SET-simhash (majority vote over DISTINCT
+# token hashes — identical token sets ⇒ identical fingerprints ⇒
+# co-celled with probability 1, the structural exact-duplicate
+# guarantee). Graded recall decays with J and is MEASURED
 # (near_dup_blocking_recall), mirroring knn_graph/knn_graph_recall.
-_SQL_CELL_CSUM = ",\n               ".join(
-    f"sum((h >> {i}) & 1) AS c{i}" for i in range(60)
-)
-_SQL_CELL_FP = " + ".join(
-    f"(CASE WHEN c{i}*2 > n THEN {1 << i} ELSE 0 END)" for i in range(60)
-)
+_SQL_CELL_CSUM, _SQL_CELL_FP = _sql_vote_fold(" " * 15)
 _SQL_CELLED_BASE = f"""tok AS (
         SELECT doc_id, unnest(list_distinct({_SQL_TOKS})) AS tok
         FROM documents WHERE text IS NOT NULL
@@ -929,13 +934,12 @@ _SQL_CELLED_BASE = f"""tok AS (
     ), fp AS (
         SELECT doc_id, ({_SQL_CELL_FP})::BIGINT AS fp FROM cnt
     ), nb AS (
-        SELECT LEAST(18, GREATEST(3,
-                 CAST(ceil(log2(count(*) / {dedup_ngram.CELL_TARGET}.0)) AS INT))) AS b
+        SELECT {cells.cell_bits_sql()} AS b
         FROM fp
     ), base AS (
         SELECT d.doc_id, d.lang, list_distinct({_SQL_TOKS}) AS toks,
                len(list_distinct({_SQL_TOKS})) AS n_toks,
-               fp.fp >> (60 - nb.b) AS cell
+               fp.fp >> ({dedup_simhash.BITS_MD5} - nb.b) AS cell
         FROM documents d JOIN fp ON d.doc_id = fp.doc_id CROSS JOIN nb
     )"""
 
@@ -960,13 +964,16 @@ _SQL_NEAR_DUP_CLUSTERS = f"""
 """
 
 
-def _near_dup_members(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    pairs = dedup_ngram.jaccard_pairs_celled(
+    return dedup_ngram.jaccard_pairs_celled(
         docs, block_cols=("lang",), length_tolerance=0.2, threshold=0.35
     ).select("id_a", "id_b")
+
+
+def _near_dup_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_components.connected_components(
-        pairs, id_alias="doc_id", comp_alias="cluster_id"
+        _near_dup_pairs(spark, sf_dir), id_alias="doc_id", comp_alias="cluster_id"
     )
 
 
@@ -1022,27 +1029,24 @@ def near_dup_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     depending on SF). Recall is monotone in J — exact-duplicate pairs
     (J = 1) are co-celled with probability 1 by construction — which is
     the regime real dedup blocking operates in; the knob is
-    dedup_ngram.CELL_TARGET (bigger cells = more recall = proportionally
-    more mass)."""
+    cells.TARGET_CELL (bigger cells = more recall = proportionally more
+    mass)."""
     docs = load_table(spark, "documents", sf_dir)
     nn = docs.filter(F.col("text").isNotNull())
-    b = dedup_ngram.cell_bits(nn.count())
-    hashes, fold = dedup_ngram._cell_fp_col("text")
-    base = (
-        nn.select(
-            "doc_id",
-            "lang",
-            F.array_distinct(textfn.tokens("text")).alias("toks"),
-            hashes.alias("__h"),
-        )
-        .withColumn("n_toks", F.size("toks"))
-        .withColumn(
-            "cell",
-            F.shiftrightunsigned(F.expr(fold), dedup_ngram._FP_BITS - b).cast(
-                "bigint"
-            ),
-        )
-        .drop("__h")
+    b = cells.cell_bits(nn.count())
+    fp_bits = dedup_simhash.BITS_MD5
+    base = nn.select(
+        "doc_id",
+        "lang",
+        F.array_distinct(textfn.tokens("text")).alias("toks"),
+        dedup_ngram.set_simhash_hashes("text").alias("__h"),
+    ).select(
+        "doc_id",
+        "lang",
+        "toks",
+        F.size("toks").alias("n_toks"),
+        cells.cell_stamp(dedup_simhash.vote_fold("__h", fp_bits), fp_bits, b)
+        .alias("cell"),
     )
     probes = base.filter(F.col("doc_id") < 1000)
     a = probes.select(

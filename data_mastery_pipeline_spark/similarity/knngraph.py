@@ -24,12 +24,12 @@ r10 verdict's prescription, MEASURED on the corpus):
 The construction that satisfies all three constraints: block on the
 first ``b`` SIGN BITS of the embedding (axis-aligned sign-LSH — each
 coordinate hyperplane is a random hyperplane in any rotated basis, and
-embedding bases are arbitrary), with ``b = clamp(ceil(log2(n /
-target_cell)), 3, max_bits)`` so the expected cell size stays ~
-``target_cell`` AT EVERY SCALE. Semantics: each node's top-k cosine
-neighbors WITHIN ITS CELL. Properties:
+embedding bases are arbitrary), with ``b`` sized from the corpus by the
+shared cell rule (dedup/cells.py) so the expected cell size stays ~
+``cells.TARGET_CELL`` AT EVERY SCALE. Semantics: each node's top-k
+cosine neighbors WITHIN ITS CELL. Properties:
 
-- **Linear mass**: Σ|cell|² ≈ n · target_cell (measured sf0.01 → sf0.1:
+- **Linear mass**: Σ|cell|² ≈ n · TARGET_CELL (measured sf0.01 → sf0.1:
   32.0k → 126.8k pairs at 4× the rows; cells balance tightly — max 74
   vs mean 62.5 at sf0.1 — because per-dim sign balance is 0.48–0.52).
 - **Deterministic + portable**: the cell id is integer arithmetic on
@@ -42,15 +42,15 @@ neighbors WITHIN ITS CELL. Properties:
   embeddings sign-LSH concentrates near pairs (miss prob per bit is
   θ/π → 0 as cos → 1); on THIS isotropic synthetic corpus it measures
   ~0.10–0.23@3 — the honest floor for data whose "neighbors" sit at
-  cosine 0.33. The recall knob is ``target_cell`` (bigger cells =
-  higher recall = proportionally more mass).
+  cosine 0.33. The recall knob is ``cells.TARGET_CELL`` (bigger cells
+  = higher recall = proportionally more mass).
 
 100 TB: one narrow pass stamps cells (no UDF, pure Catalyst), one
 shuffle co-locates cells, per-cell pair expansion is bounded by
-``target_cell``, and the per-node top-k is a window over ≤
-``target_cell`` rows. The one skew risk — a correlated dimension
-collapsing sign balance — is visible in ``cell`` histograms and
-AQE skew-join splits oversized cells at runtime.
+TARGET_CELL, and the per-node top-k is a window over ≤ TARGET_CELL
+rows. The one skew risk — a correlated dimension collapsing sign
+balance — is visible in ``cell`` histograms and AQE skew-join splits
+oversized cells at runtime.
 """
 
 from __future__ import annotations
@@ -58,12 +58,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..dedup.cells import celled_base
 from ..dedup.embedding import cosine
 
-# bits pooled from the leading dims; cells = 2^b ≤ 2^MAX_BITS
+# sign bits pooled from the leading dims — the fingerprint the cell
+# keeps the leading b bits of
 POOL_BITS = 32
-MAX_BITS = 18
-MIN_BITS = 3
 
 
 def sign_bits_expr(vec_col):
@@ -77,52 +77,23 @@ def sign_bits_expr(vec_col):
     )
 
 
-def blocking_bits_expr(n_col, target_cell: int):
-    """b = clamp(ceil(log2(n / target_cell)), MIN_BITS, MAX_BITS) —
-    cell granularity GROWS with the corpus so expected cell size (and
-    with it per-node candidate work) stays constant at every scale."""
-    return F.least(
-        F.lit(MAX_BITS),
-        F.greatest(
-            F.lit(MIN_BITS),
-            F.ceil(F.log2(n_col / F.lit(float(target_cell)))).cast("int"),
-        ),
-    )
-
-
 def with_sign_cells(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    target_cell: int = 64,
 ) -> DataFrame:
-    """(id, v: array<double>, cell: bigint) — the shared blocked base.
-    One count job sizes ``b`` driver-side so the scan carries a LITERAL
-    shift (r12: the former 1-row count aggregate + crossJoin broadcast
-    appeared once per join side in the physical plan — the count ran
-    twice; a collected literal cannot be duplicated). floor(bits /
-    2^(32−b)) keeps the b LEADING sign bits; all values < 2^32 so the
-    double arithmetic is exact and portable, matching the SQL mirror."""
-    import math
-
+    """(id, v: array<double>, cell: bigint) — the shared blocked base,
+    materialized once (dedup/cells.celled_base): one count sizes ``b``
+    driver-side so the stamp carries a LITERAL shift, and both join
+    sides read the checkpoint instead of re-scanning the embeddings.
+    The sign pool is < 2^32, so ``bits >>> (32 − b)`` equals the
+    oracle's exact double arithmetic ``floor(bits / 2^(32−b))``."""
     base = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    n = base.count()
-    b = min(
-        MAX_BITS,
-        max(MIN_BITS, math.ceil(math.log2(max(n, 1) / float(target_cell)))),
-    )
-    return base.select(
-        "id",
-        "v",
-        F.floor(
-            sign_bits_expr(F.col("v"))
-            / F.pow(F.lit(2.0), F.lit(float(POOL_BITS - b)))
-        )
-        .cast("bigint")
-        .alias("cell"),
+    return celled_base(
+        base.withColumn("__fp", sign_bits_expr(F.col("v"))), "__fp", POOL_BITS
     )
 
 
@@ -131,22 +102,12 @@ def blocked_knn_graph(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    target_cell: int = 64,
 ) -> DataFrame:
     """Top-k cosine neighbors per node WITHIN ITS SIGN-LSH CELL
     (module docstring): (qid, nbr_id, rnk, cos[4dp]). A node alone in
     its cell emits nothing (it has no in-cell neighbors — the blocked
     contract, mirrored by the oracle)."""
-    # materialize the celled base ONCE: both join sides derive from it,
-    # and without the checkpoint the embeddings scan + cell stamp
-    # subtree appears twice in the physical plan (r11 verdict item 4 —
-    # at 100 TB a doubled corpus scan is real money). Data-sized →
-    # serialized + spillable (checkpointing.truncate_lineage).
-    from ..checkpointing import truncate_lineage
-
-    celled = truncate_lineage(
-        with_sign_cells(emb, id_col, vec_col, target_cell), footprint="data"
-    )
+    celled = with_sign_cells(emb, id_col, vec_col)
     a = celled.select(
         F.col("id").alias("qid"), F.col("v").alias("qv"), "cell"
     )

@@ -1,21 +1,18 @@
-"""Kafka source/sink wiring + the JSON record parse/serialize pair.
+"""The Kafka JSON record parse/serialize pair.
 
 The reference's producer sends keyed JSON (key=city for per-key
 ordering, gzip, acks=all — weather_producer.py:146-154) and its consumer
 reads with a group id + manual commit (kafka_consumer_s3.py:127-135).
-Spark equivalents: ``format("kafka")`` both ways; delivery tracking via
-checkpoint offsets, not consumer-group commits.
-
-No broker ships in this container, so the source/sink builders are
-wiring-only (exercised by constructing Kafka-SHAPED frames in tests);
-the parse/serialize transformations are plain column logic, fully
-tested batch-side — which is the point: the analytical code is
-identical whether rows arrive from Kafka or parquet.
+The live transport is the kafka-wire datasource (streaming/kafkawire.py);
+the record transformations here are plain column logic over
+(key, value, partition, offset, timestamp) frames — which is the point:
+the analytical code is identical whether rows arrive from Kafka or
+parquet.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -24,43 +21,6 @@ from pyspark.sql import types as T
 # the produce and parse sides must always agree (review r6: the string
 # existed in four places).
 TS_FMT_MICROS = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-
-# Shape of rows the Kafka source yields (the contract the parser codes to).
-KAFKA_RECORD = T.StructType(
-    [
-        T.StructField("key", T.BinaryType()),
-        T.StructField("value", T.BinaryType()),
-        T.StructField("topic", T.StringType()),
-        T.StructField("partition", T.IntegerType()),
-        T.StructField("offset", T.LongType()),
-        T.StructField("timestamp", T.TimestampType()),
-    ]
-)
-
-
-def kafka_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-    streaming: bool = True,
-) -> DataFrame:
-    """Kafka scan (S4): streaming or batch read of a topic.
-
-    ``maxOffsetsPerTrigger`` is the back-pressure knob replacing the
-    reference's max_poll_records=batch_size (kafka_consumer_s3.py:133).
-    """
-    reader = spark.readStream if streaming else spark.read
-    r = (
-        reader.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None and streaming:
-        r = r.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    return r.load()
 
 
 def parse_json_records(
@@ -93,21 +53,4 @@ def to_kafka_records(
     return df.select(
         F.col(key_col).cast("string").alias("key"),
         F.to_json(F.struct(*df.columns), json_options or {}).alias("value"),
-    )
-
-
-def kafka_sink(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-    key_col: str,
-):
-    """Kafka streaming sink (S3): keyed JSON out, checkpointed."""
-    return (
-        to_kafka_records(df, key_col)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
     )

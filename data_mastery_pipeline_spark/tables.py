@@ -332,9 +332,3 @@ def check_drift(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) ->
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Load the full star schema as a dict of DataFrames."""
     return {name: load_table(spark, name, sf_dir) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view for the SQL entry point."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

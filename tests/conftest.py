@@ -24,7 +24,10 @@ deep property sweep:
   CC vs brute, salted-vs-plain …) — the single heaviest file; its
   invariants are spot-pinned by the per-operator fast suites;
 - test_txlog + test_streaming: full lifecycle/multi-batch machinery
-  sweeps (many sequential bounded actions each).
+  sweeps (many sequential bounded actions each);
+- test_search: the SearchIndex incremental-maintenance sweep — every
+  DML shape replayed on a txlog table and compared against a rebuild,
+  so it pays the same per-commit lifecycle cost as the txlog family.
 """
 
 from __future__ import annotations

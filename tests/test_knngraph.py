@@ -10,8 +10,7 @@ from __future__ import annotations
 import math
 import random
 
-from pyspark.sql import functions as F
-
+from data_mastery_pipeline_spark.dedup import cells
 from data_mastery_pipeline_spark.similarity import knngraph
 
 DIM = 32
@@ -42,18 +41,14 @@ def _q4(x):
     return math.floor(x * 10000 + 0.5) / 10000.0
 
 
-def _py_graph(rows, k=3, target_cell=64):
-    n = len(rows)
-    b = min(
-        knngraph.MAX_BITS,
-        max(knngraph.MIN_BITS, math.ceil(math.log2(n / float(target_cell)))),
-    )
-    cells = {}
+def _py_graph(rows, k=3):
+    b = cells.cell_bits(len(rows))
+    by_cell = {}
     for i, v in rows:
         bits = sum((1 << j) for j in range(knngraph.POOL_BITS) if v[j] > 0)
-        cells.setdefault(bits >> (knngraph.POOL_BITS - b), []).append((i, v))
+        by_cell.setdefault(bits >> (knngraph.POOL_BITS - b), []).append((i, v))
     out = []
-    for members in cells.values():
+    for members in by_cell.values():
         for qid, qv in members:
             scored = sorted(
                 (( -_q4(_cos(nv, qv)), nid) for nid, nv in members if nid != qid),
@@ -97,7 +92,7 @@ def test_lone_cell_node_emits_nothing(spark):
     """A node alone in its cell has no in-cell neighbors — the blocked
     contract says it emits no rows and appears in no one's top-k."""
     # all crowd vectors share the 3 leading sign bits (dims 29..31
-    # negative) => one cell at b = MIN_BITS; the loner flips them
+    # negative) => one cell at b = cells.MIN_BITS; the loner flips them
     rng = random.Random(3)
     rows = []
     for i in range(40):
@@ -117,23 +112,15 @@ def test_lone_cell_node_emits_nothing(spark):
     )
 
 
-def test_blocking_bits_scale_with_n(spark):
-    """b = clamp(ceil(log2(n / target_cell)), 3, 18): cell granularity
+def test_blocking_bits_scale_with_n():
+    """b = clamp(ceil(log2(n / TARGET_CELL)), 3, 18): cell granularity
     must GROW with the corpus so per-node candidate work stays ~
-    target_cell at every scale (the anti-quadratic invariant)."""
-    df = spark.range(0, 1).select(
-        F.lit(40.0).alias("n40"),
-        F.lit(500.0).alias("n500"),
-        F.lit(1.0e9).alias("nbig"),
-    )
-    row = df.select(
-        knngraph.blocking_bits_expr(F.col("n40"), 64).alias("b40"),
-        knngraph.blocking_bits_expr(F.col("n500"), 64).alias("b500"),
-        knngraph.blocking_bits_expr(F.col("nbig"), 64).alias("bbig"),
-    ).collect()[0]
-    assert row.b40 == 3  # clamped at MIN_BITS
-    assert row.b500 == 3  # ceil(log2(500/64)) = 3
-    assert row.bbig == knngraph.MAX_BITS  # clamped at MAX_BITS
+    TARGET_CELL at every scale (the anti-quadratic invariant). The kNN
+    graph sizes its cells with the shared rule, dedup/cells.cell_bits."""
+    assert cells.TARGET_CELL == 64
+    assert cells.cell_bits(40) == 3  # clamped at MIN_BITS
+    assert cells.cell_bits(500) == 3  # ceil(log2(500/64)) = 3
+    assert cells.cell_bits(10**9) == cells.MAX_BITS  # clamped at MAX_BITS
 
 
 def test_oracle_sql_blocking_is_in_lockstep(spark):

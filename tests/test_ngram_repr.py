@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import itertools
 
-from data_mastery_pipeline_spark.dedup import ngram
+from data_mastery_pipeline_spark.dedup import cells, ngram
 
 
 def _brute_pairs(rows, threshold):
@@ -95,7 +95,7 @@ def test_lossless_length_bound_finds_containment_pairs(spark):
     knob that DROPS a short doc fully contained in a long one;
     length_tolerance=None (exact Jaccard bound [n·t, n/t]) must find
     it. Pins both behaviors so the trade stays deliberate."""
-    from data_mastery_pipeline_spark.dedup import ngram
+    from data_mastery_pipeline_spark.dedup import cells, ngram
 
     short = " ".join(f"w{i}" for i in range(40))
     long_ = " ".join(f"w{i}" for i in range(80))  # J = 40/80 = 0.5
@@ -159,17 +159,37 @@ def test_celled_repr_parity_bitmask_vs_array(spark):
     assert auto == arr and auto
 
 
+# n values spanning both clamps and the power-of-two boundaries; n = 0
+# is the empty / all-NULL-text corpus
+CELL_NS = (0, 1, 40, 64, 500, 512, 513, 5000, 200000, 64 * (1 << 18), 10**9, 10**12)
+
+
 def test_cell_bits_clamp_and_growth():
-    """b = clamp(ceil(log2(n/target)), 3, 18): constant expected cell
-    size at every scale, clamped at both ends; power-of-two boundaries
-    land exactly (log2 is exact there in IEEE double — the property the
-    DuckDB mirror relies on)."""
-    assert ngram.cell_bits(0) == 3
-    assert ngram.cell_bits(64) == 3
-    assert ngram.cell_bits(512) == 3
-    assert ngram.cell_bits(513) == 4
-    assert ngram.cell_bits(5000) == 7
-    assert ngram.cell_bits(64 * (1 << 18)) == 18
-    assert ngram.cell_bits(10**12) == 18
-    assert ngram.cell_bits(200, target_cell=64) == 3
-    assert ngram.cell_bits(200000) == 12
+    """b = clamp(ceil(log2(n/TARGET_CELL)), 3, 18): constant expected
+    cell size at every scale — per-node candidate work stays ~
+    TARGET_CELL, the anti-quadratic invariant both blocked joins rely
+    on — clamped at both ends; power-of-two boundaries land exactly
+    (log2 is exact there in IEEE double — the property the DuckDB
+    mirror relies on)."""
+    expected = (3, 3, 3, 3, 3, 3, 4, 7, 12, 18, 18, 18)
+    assert [cells.cell_bits(n) for n in CELL_NS] == list(expected)
+    assert cells.cell_bits(40) == cells.MIN_BITS
+    assert cells.cell_bits(10**9) == cells.MAX_BITS
+
+
+def test_cell_bits_sql_matches_python():
+    """The oracles' width rule (cells.cell_bits_sql, run in DuckDB)
+    agrees with the Spark-side cell_bits for every n — including n = 0,
+    where an unguarded log2(0) errors in DuckDB while Python clamps —
+    and the count(*) form clamps an empty input the same way."""
+    import duckdb
+
+    con = duckdb.connect()
+    (empty,) = con.execute(f"SELECT {cells.cell_bits_sql()} FROM range(0)").fetchone()
+    assert empty == cells.cell_bits(0) == cells.MIN_BITS
+    # the row count as a bound value: corpora up to 10^12 rows
+    over_n = cells.cell_bits_sql().replace("count(*)", "CAST(? AS BIGINT)")
+    for n in CELL_NS:
+        (got,) = con.execute(f"SELECT {over_n}", [n]).fetchone()
+        assert got == cells.cell_bits(n), n
+    con.close()

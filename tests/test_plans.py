@@ -400,3 +400,23 @@ def test_read_schema_columns_handles_nested_types(spark):
     assert any(
         {"embedding", "label"} <= set(cols) for cols in cols_per_scan
     ), cols_per_scan
+
+
+def test_blocked_self_joins_read_one_materialized_base(q, spark):
+    """Both sides of the near-dup and kNN-graph blocked self-joins read
+    the ONE checkpointed celled base (dedup/cells.celled_base): no join
+    side re-scans the corpus or re-runs the simhash vote fold. Without
+    the checkpoint the md5 fold runs on both sides of the near-dup edge
+    join, several times slower. The final near_dup_clusters plan reads
+    connected components' own checkpoint, so the edge relation is
+    checked separately."""
+    from data_mastery_pipeline_spark.queries_ext import _near_dup_pairs
+
+    for name, df in (
+        ("near_dup_clusters", q["near_dup_clusters"]),
+        ("near_dup_clusters edges", _near_dup_pairs(spark, SF_ORACLE)),
+        ("knn_graph", q["knn_graph"]),
+    ):
+        plan = plans.formatted_plan(df)
+        assert plans.scan_count(df) == 0, name
+        assert "shiftleft(1, lambda" not in plan, name

@@ -72,10 +72,11 @@ def main() -> None:
 _EPILOGUE = """\
 ## Notes on the >2 s entries (sf0.1, local[32])
 
-- **near_dup_clusters (~5 s)**: dominated by exact-Jaccard edge
-  generation over 1.5M blocked candidate pairs (array_intersect on
-  int64 token sets; superlinearly sensitive to host CPU contention —
-  see the per-round detail block in the bench output). The CC loop is
+- **near_dup_clusters (~5 s)**: edge generation is one pass of the
+  md5 set-simhash fold into the checkpointed celled base
+  (dedup/cells.celled_base — both join sides read it, so the plan has
+  no parquet scan and no fold) plus exact-Jaccard verification of the
+  in-cell candidate pairs (Σ|cell|², linear in n). The CC loop is
   ONE distributed round (pointer doubling to fixpoint, worst-case
   O(log diameter)) followed by the bounded driver union-find finish
   once ≤10k edges remain (`finish` entry in the detail).

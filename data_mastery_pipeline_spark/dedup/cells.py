@@ -12,17 +12,18 @@ sign bits for kNN). The width grows with the corpus,
 so the expected cell size stays ~TARGET_CELL at every scale and the
 scored-pair mass Σ|cell|² ≈ n · TARGET_CELL stays LINEAR. The recall
 knob is TARGET_CELL: bigger cells = more recall = proportionally more
-mass. ``b`` is sized driver-side from ONE count so the stamp carries a
-literal shift; the oracles evaluate the same rule from
-:func:`cell_bits_sql`. Each operator keeps its own join and
-verification (knn joins on ``!=``, ngram on ``<`` plus length bands).
+mass. ``b`` is sized driver-side from the row count of the
+checkpointed base so the stamp carries a literal shift; the oracles
+evaluate the same rule from :func:`cell_bits_sql`. Each operator keeps
+its own join and verification (knn joins on ``!=``, ngram on ``<``
+plus length bands).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
@@ -63,9 +64,13 @@ def celled_base(df: DataFrame, fp_col: str, fp_bits: int) -> DataFrame:
     """``df`` with its fingerprint column ``fp_col`` replaced by ``cell``,
     materialized ONCE. Both sides of a blocked self-join read the
     checkpoint, so the scan and the fingerprint pass run once instead
-    of once per join side. Data-sized → serialized + spillable
-    (checkpointing.truncate_lineage). Eager: the count and the
-    checkpoint run as jobs when the plan is built."""
-    b = cell_bits(df.count())
-    celled = df.withColumn("cell", cell_stamp(F.col(fp_col), fp_bits, b))
-    return truncate_lineage(celled.drop(fp_col), footprint="data")
+    of once per join side; only the literal-shift stamp runs per side.
+    Data-sized → serialized + spillable (checkpointing.truncate_lineage).
+    Eager: ONE job, the checkpoint, runs when the plan is built; an
+    ``Observation`` on it counts the rows that size ``b``."""
+    obs = Observation()
+    base = truncate_lineage(
+        df.observe(obs, F.count(F.lit(1)).alias("n")), footprint="data"
+    )
+    stamp = cell_stamp(F.col(fp_col), fp_bits, cell_bits(obs.get["n"]))
+    return base.withColumn("cell", stamp).drop(fp_col)

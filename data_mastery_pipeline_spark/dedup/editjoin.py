@@ -1,7 +1,8 @@
 """Edit-distance similarity join with q-gram prefix filtering — the
 ED-Join design (Xiao, Wang, Lin: "Ed-Join: an efficient algorithm for
 similarity joins with edit distance constraints", VLDB 2008), the
-edit-metric sibling of ngram.py's PPJoin prefix filter.
+edit-metric sibling of the PPJoin prefix filter (Xiao, Wang, Lin, Yu:
+"Efficient Similarity Joins for Near Duplicate Detection", WWW 2008).
 
 Problem: all pairs within Levenshtein distance ≤ k. A blocked
 cross-join is quadratic in the corpus (measured: the lang-blocked

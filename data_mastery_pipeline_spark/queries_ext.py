@@ -1035,46 +1035,26 @@ def near_dup_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     nn = docs.filter(F.col("text").isNotNull())
     b = cells.cell_bits(nn.count())
     fp_bits = dedup_simhash.BITS_MD5
+    toks, n, inter = dedup_ngram.hashed_token_sets("text")
     base = nn.select(
-        "doc_id",
+        F.col("doc_id").alias("id"),
         "lang",
-        F.array_distinct(textfn.tokens("text")).alias("toks"),
+        toks.alias("toks"),
         dedup_ngram.set_simhash_hashes("text").alias("__h"),
     ).select(
-        "doc_id",
+        "id",
         "lang",
         "toks",
-        F.size("toks").alias("n_toks"),
+        n.alias("n"),
         cells.cell_stamp(dedup_simhash.vote_fold("__h", fp_bits), fp_bits, b)
         .alias("cell"),
     )
-    probes = base.filter(F.col("doc_id") < 1000)
-    a = probes.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("toks").alias("toks_a"),
-        F.col("n_toks").alias("n_a"),
-        F.col("cell").alias("cell_a"),
+    a, bs, cond = dedup_ngram.band_join_sides(
+        base.filter(F.col("id") < 1000), ("lang",), 0.2, 0.35
     )
-    bs = probes.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("toks").alias("toks_b"),
-        F.col("n_toks").alias("n_b"),
-        F.col("cell").alias("cell_b"),
-    )
-    inter = F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
-    union = (F.col("n_a") + F.col("n_b")).cast("double") - inter
-    truep = (
-        a.join(
-            F.broadcast(bs),
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("lang_a") == F.col("lang_b"))
-            & F.col("n_b").between(F.col("n_a") * 0.8, F.col("n_a") * 1.2),
-        )
-        .filter((inter / union) >= 0.35)
-        .select((F.col("cell_a") == F.col("cell_b")).alias("comatch"))
-    )
+    truep = dedup_ngram.jaccard_filter(
+        a.join(F.broadcast(bs), cond), inter, 0.35
+    ).select((F.col("cell_a") == F.col("cell_b")).alias("comatch"))
     hits = F.coalesce(
         F.sum(F.when(F.col("comatch"), 1).otherwise(0)), F.lit(0)
     ).cast("long")

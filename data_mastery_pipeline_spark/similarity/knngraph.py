@@ -83,8 +83,8 @@ def with_sign_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, v: array<double>, cell: bigint) — the shared blocked base,
-    materialized once (dedup/cells.celled_base): one count sizes ``b``
-    driver-side so the stamp carries a LITERAL shift, and both join
+    materialized once (dedup/cells.celled_base): the checkpoint's row
+    count sizes ``b`` driver-side so the stamp carries a LITERAL shift, and both join
     sides read the checkpoint instead of re-scanning the embeddings.
     The sign pool is < 2^32, so ``bits >>> (32 − b)`` equals the
     oracle's exact double arithmetic ``floor(bits / 2^(32−b))``."""

@@ -16,7 +16,7 @@ architecture as the JDBC connector:
     DO UPDATE, the gold_loader idempotency contract backed by the
     serving key's UNIQUE constraint, sql/schema.sql:86) its partition.
     Connection count == task count, so callers bound it with
-    ``num_partitions`` exactly like jdbc.py.
+    ``num_partitions`` exactly like Spark's JDBC sink.
 
 Delivery: plain ``append`` duplicates rows if a task retries —
 effectively-once needs ``upsert_keys`` (task retries then re-apply the
@@ -312,7 +312,7 @@ def write_serving_table(
     num_partitions: int = 8,
 ) -> None:
     """Connection-bounded serving load (``num_partitions`` caps
-    concurrent DB connections — jdbc.py's knob, same reason)."""
+    concurrent DB connections — the JDBC sink's knob, same reason)."""
     (
         df.coalesce(num_partitions)
         .write.format("pg_serving")

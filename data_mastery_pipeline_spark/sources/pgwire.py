@@ -18,7 +18,7 @@ Executor-side by design: every Spark task opens its own short-lived
 connection (pickling a socket is impossible and sharing one would
 serialize the cluster through it). Connection count is therefore
 bounded by the task count — the caller controls it with
-coalesce/numPartitions exactly like the JDBC sink (jdbc.py).
+coalesce/numPartitions exactly like Spark's JDBC sink.
 """
 
 from __future__ import annotations

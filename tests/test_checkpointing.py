@@ -62,12 +62,12 @@ def test_known_data_sized_sites_are_flagged():
     assert src.count('footprint="data"') >= 3  # epoch base, c12, per_src
     # ADVICE r10: the rollout had missed these three modules
     from data_mastery_pipeline_spark import corpus_pipeline
-    from data_mastery_pipeline_spark.dedup import ngram
+    from data_mastery_pipeline_spark.dedup import cells
     from data_mastery_pipeline_spark.sources import txlog
 
     src = inspect.getsource(corpus_pipeline)
     assert 'footprint="data"' in src  # the per-stage ckpt lambda
-    src = inspect.getsource(ngram)
-    assert 'footprint="data"' in src  # PPJoin hashed-token base
+    src = inspect.getsource(cells)
+    assert 'footprint="data"' in src  # the celled base of the blocked self-joins
     src = inspect.getsource(txlog)
     assert src.count('footprint="data"') >= 2  # DV matched rows, merge updates

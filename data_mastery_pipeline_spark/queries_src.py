@@ -1758,11 +1758,9 @@ def txlog_ivm_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, "events", sf_dir)
     base_dir = _fresh_dir("txlog_ivm", sf_dir)
-    src_root = os.path.join(base_dir, "src")
-    tgt_root = os.path.join(base_dir, "tgt")
     src = _txlog.TxTable.create(
         spark,
-        src_root,
+        os.path.join(base_dir, "src"),
         ev.filter((F.col("event_id") % 7).isin(0, 1)).repartition(4, "event_id"),
         stat_cols=["event_id", "user_id", "value"],
     )
@@ -1771,31 +1769,16 @@ def txlog_ivm_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tgt = _txlog.TxTable.create(
         spark,
-        tgt_root,
+        os.path.join(base_dir, "tgt"),
         local_frame(spark, [], _ivm.mv_schema("event_type", "string")),
     )
-    _txlog.register(spark)
-
-    def drain(ckpt: str) -> None:
-        q = (
-            spark.readStream.format("txlog_feed")
-            .option("root", src_root)
-            .option("mode", "cdf")
-            .load()
-            .writeStream.foreachBatch(
-                _ivm.foreach_batch_view_sink(tgt, "event_type", "value", "mv")
-            )
-            .option("checkpointLocation", os.path.join(base_dir, ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain("c1")
+    sink = _ivm.foreach_batch_view_sink(tgt, "event_type", "value", "mv")
+    ckpt = os.path.join(base_dir, "c1")
+    _ivm.drain_cdf(src, sink, ckpt)
     # more source commits; the SAME checkpoint applies only the delta
     src.delete_where("value", 100.0, 140.0)
     src.append(ev.filter(F.col("event_id") % 7 == 2))
-    drain("c1")
+    _ivm.drain_cdf(src, sink, ckpt)
     view = _ivm.current_view(tgt)
     direct = (
         src.read()

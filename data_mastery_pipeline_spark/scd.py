@@ -39,7 +39,8 @@ Preconditions, enforced loudly in-flight (conditional raise_error
 riding the projection — zero extra passes): the source holds at most
 one live row per key (the dimension contract merge_upsert itself
 enforces on its write side), and NULL keys are not trackable (dropped,
-the MERGE NULL-never-matches convention shared with streaming/ivm.py).
+the MERGE NULL-never-matches convention of streaming/ivm.py, whose
+``signed_weight`` is the netting weight here).
 
 Reference parity: the reference pipeline re-lands current-state
 aggregates and keeps no history (silver_processor.py writes latest
@@ -56,6 +57,7 @@ from pyspark.sql import functions as F
 
 from .localrel import local_frame
 from .sources.txlog import TxTable
+from .streaming.ivm import signed_weight
 
 _ID_SEP = ":"
 
@@ -121,9 +123,7 @@ class Scd2Dimension:
         tombstone (``__state`` NULL). Netting by full attribute tuple
         cancels rewrite churn; the uniqueness guard rides the
         projection as a conditional raise_error."""
-        w = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
-            F.lit(-1)
-        )
+        w = signed_weight()
         net = (
             cdf.filter(F.col(self.key).isNotNull())
             .groupBy(self.key, *attrs, "_commit_version")
@@ -245,15 +245,12 @@ class Scd2Dimension:
                 F.col("__next_v").isNull().alias("is_current"),
             )
         )
-        pre = self.target.version()
-        res = self.target.merge_upsert(
+        # an all-churn window (zero rows) still records its watermark
+        # (merge_upsert's empty stream_txn rule), so the applier can
+        # never wedge stale
+        self.target.merge_upsert(
             rows, "__scd_id", stream_txn=(self._app_id(), want)
         )
-        if res == pre or res is None:
-            # all-churn (or replayed) window: record the caught-up
-            # watermark with a data-free commit so the applier can
-            # never wedge stale (the mv.py lesson, review r7)
-            self.target.mark_stream_batch(self._app_id(), want)
         return want
 
     # -- reads ------------------------------------------------------------

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from .functions import text as textfn
 from .localrel import local_frame
 from .sources.txlog import TxTable
+from .streaming.ivm import signed_weight
 
 K1 = 1.2
 B = 0.75
@@ -123,9 +124,8 @@ class SearchIndex:
         """Net the raw change feed by full logical row: rewrite churn
         (delete+insert of the same row) cancels; output rows carry
         net = +1 (insert) or −1 (delete)."""
-        w = F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
         return (
-            cdf.select("doc_id", "text", w.alias("w"))
+            cdf.select("doc_id", "text", signed_weight().alias("w"))
             .groupBy("doc_id", "text")
             .agg(F.sum("w").alias("net"))
             .filter(F.col("net") != 0)

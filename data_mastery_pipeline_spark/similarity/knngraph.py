@@ -68,11 +68,11 @@ POOL_BITS = 32
 
 def sign_bits_expr(vec_col):
     """Integer in [0, 2^POOL_BITS): bit j set iff vec[j] > 0. Pure
-    comparisons + literal adds — bit-identical in any engine."""
+    comparisons + literal adds — bit-identical in any engine. A vector
+    narrower than POOL_BITS reads NULL past its end (``get``), so those
+    bits are 0 — as DuckDB's out-of-range ``v[j]`` is NULL."""
     return sum(
-        F.when(F.element_at(vec_col, j + 1) > 0, F.lit(1 << j)).otherwise(
-            F.lit(0)
-        )
+        F.when(F.get(vec_col, j) > 0, F.lit(1 << j)).otherwise(F.lit(0))
         for j in range(POOL_BITS)
     )
 

@@ -1245,7 +1245,8 @@ class TxTable:
         empty-micro-batch commit. A read-modify-write sink whose batch
         folds to zero effective rows still needs its (app, batch)
         recorded, or the consumer can never declare itself caught up
-        (mv.refresh over a CDF range whose delta is empty — review r7).
+        (:meth:`merge_upsert` calls this for an empty ``stream_txn``
+        merge).
         Returns the commit version, or None when the watermark is
         already at or past ``batch_id`` (the replay no-op)."""
         last = self.last_stream_batch(app_id)
@@ -1641,7 +1642,15 @@ class TxTable:
         change feed — streaming/ivm.py) safe under Structured
         Streaming's at-least-once foreachBatch delivery: applying a
         delta twice would corrupt the aggregate, so the watermark, not
-        idempotence, carries the guarantee."""
+        idempotence, carries the guarantee.
+
+        Empty batches: with no update rows, a plain merge commits
+        nothing and returns the current version; a ``stream_txn``
+        merge still records its watermark with a data-free commit
+        (:meth:`mark_stream_batch`, whose result it returns), so a
+        sink whose batch folds to zero rows is never left stale. The
+        row count comes from the bounds aggregate the merge runs
+        anyway — no extra Spark job."""
         if stream_txn is not None:
             last = self.last_stream_batch(stream_txn[0])
             if last is not None and stream_txn[1] <= last:
@@ -1669,7 +1678,9 @@ class TxTable:
                 F.countDistinct(key).alias("n_distinct"),
             ).collect()[0]
             if bounds["n"] == 0:
-                return rv
+                if stream_txn is None:
+                    return rv
+                return self.mark_stream_batch(*stream_txn)
             if bounds["n_key"] != bounds["n"]:
                 raise ValueError("merge_upsert: NULL update keys")
             if bounds["n_distinct"] != bounds["n"]:

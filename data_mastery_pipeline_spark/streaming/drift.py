@@ -1,43 +1,47 @@
-"""Streaming drift monitor over the transaction log's CDC feed —
-per-micro-batch PSI against a pinned reference window.
+"""Streaming drift monitors over the transaction log's CDC feed —
+per-micro-batch PSI, two-sample KS and CUSUM against a pinned
+reference.
 
 The monitoring family (queries_insight.py: KS/CUSUM/PSI/WoE) is
 batch-shaped: each run re-scans the data. A production drift monitor
 must instead ride the change feed — the distribution summary is
 maintained INCREMENTALLY and the statistic is recomputed per trigger
-against a frozen reference. This module composes exactly that from
-parts the repo already trusts:
+against a frozen reference. All three monitors share one lifecycle
+(:class:`_CdcMonitor`), built from parts the repo already trusts:
 
-- **Binned histogram state** (``bins`` target table, one row per
-  value bin): maintained from the CDC stream by signed folds
-  (+1 insert / −1 delete — `ivm.signed_weight`, the retraction
-  algebra of the IVM sink), merged exactly-once per micro-batch via
-  :meth:`TxTable.merge_upsert` ``stream_txn``. A replayed batch is a
-  no-op, so the histogram equals the direct binning of the source's
+- **Maintained state** (``bins`` / ``vals`` / ``days``, one row per
+  key): each micro-batch folds through streaming/ivm.py, the one
+  change-feed fold — ``ivm.signed_sums`` (+1 insert / −1 delete) and
+  the exactly-once ``ivm.fold_into`` merge. A replayed batch is a
+  no-op, so the state equals the direct aggregate of the source's
   current snapshot bit-for-bit under ANY batch boundaries (integer
-  counts commute exactly).
-- **Pinned reference** — the per-bin histogram of the source at the
-  reference version, computed once from ``read(version=ref)``.
-- **PSI per trigger** — after each batch's fold, the Population
-  Stability Index between the maintained histogram and the reference
-  is appended to a ``psi_log`` table (``batch_id``, ``psi``,
-  ``n_rows``), itself exactly-once via ``append_stream_batch``. If a
-  crash lands between the two commits, the replay no-ops the bins
-  merge (watermark) and recomputes the SAME psi from the already-final
-  bins state — the log row is never wrong, only late.
+  counts and cents commute exactly).
+- **Pinned reference** — computed once from ``read(version=ref)``.
+- **One statistic row per trigger** — after each batch's fold, the
+  statistic between the maintained state and the reference is
+  appended to a log table (``psi_log`` / ``ks_log`` / ``cusum_log``),
+  itself exactly-once via ``append_stream_batch``. If a crash lands
+  between the two commits, the replay no-ops the state merge
+  (watermark) and recomputes the SAME row from the already-final
+  state — the log row is never wrong, only late.
+- **Equality twin** (``assert_consistent``) — the maintained state
+  must equal the direct-snapshot aggregate (:func:`histogram`,
+  :func:`value_counts`, :func:`day_sums`, which deliberately do NOT
+  go through the fold under test), and the last logged row must equal
+  the statistic recomputed from final state.
 
 PSI with the standard +0.5 smoothing over the FULL bin domain (empty
 bins included): ``p_i = (cur_i + 0.5) / (curN + 0.5·B)`` and likewise
 for the reference; ``PSI = Σ (p_i − q_i)·ln(p_i / q_i)``. NULL values
 are not samples of the distribution and are excluded on both the
-fold and the direct-binning sides.
+fold and the direct sides.
 
 100 TB: per trigger the source side reads O(changed files) (the CDC
-planner), the fold is one hash aggregate over change rows to ≤B bin
-cells, and the target merge rewrites O(files overlapping the touched
-bins) of a ≤B-row table. The monitor's steady-state cost is the size
-of the CHANGES — the whole point over re-scanning 100 TB per
-evaluation.
+planner), the fold is one hash aggregate over change rows to the
+state's keys, and the target merge rewrites O(files overlapping the
+touched keys) of a small state table. The monitor's steady-state cost
+is the size of the CHANGES — the whole point over re-scanning 100 TB
+per evaluation.
 
 Reference surface: the reference has no monitoring at all; this is
 the public drift-monitoring pattern (Evidently/whylogs-style PSI)
@@ -47,9 +51,10 @@ re-expressed over this repo's CDC + exactly-once sink machinery.
 from __future__ import annotations
 
 import math
+import os
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localrel import local_frame
@@ -84,41 +89,6 @@ def histogram(
         .groupBy(bin_expr(F.col(value_col), edges).alias("bin"))
         .agg(F.count("*").cast("bigint").alias("n_rows"))
     )
-
-
-def delta_for_batch(
-    batch_df: DataFrame, value_col: str, edges: Sequence[float]
-) -> DataFrame:
-    """One micro-batch of CDC rows → per-bin signed count delta."""
-    w = ivm.signed_weight()
-    return (
-        batch_df.filter(F.col(value_col).isNotNull())
-        .groupBy(bin_expr(F.col(value_col), edges).alias("bin"))
-        .agg(F.sum(w).cast("bigint").alias("n_rows"))
-    )
-
-
-def _fold_merge(
-    tgt: TxTable,
-    delta: DataFrame,
-    key_col: str,
-    val_col: str,
-    app_id: str,
-    batch_id: int,
-) -> None:
-    """The signed-fold merge every monitor sink shares: read the
-    current state, add this batch's per-key delta, merge exactly-once
-    under the (app_id, batch_id) txn watermark. One definition so the
-    exactly-once/merge rules can never diverge across the PSI/KS/CUSUM
-    sinks (review r10)."""
-    cur = tgt.read().select(key_col, F.col(val_col).alias("__cur"))
-    merged = delta.join(cur, key_col, "left").select(
-        key_col,
-        (F.coalesce(F.col("__cur"), F.lit(0)) + F.col(val_col))
-        .cast("bigint")
-        .alias(val_col),
-    )
-    tgt.merge_upsert(merged, key_col, stream_txn=(app_id, batch_id))
 
 
 def psi_table(
@@ -167,57 +137,125 @@ def psi_table(
     )
 
 
-def foreach_batch_drift_sink(
-    bins_tgt: TxTable,
-    psi_log: TxTable,
-    ref_bins_rows: dict[int, int],
-    value_col: str,
-    edges: Sequence[float],
-    app_id: str,
-    threshold: float = 0.2,
-):
-    """``writeStream.foreachBatch(...)`` sink: fold the batch's signed
-    bin deltas into ``bins_tgt`` (exactly-once merge), then append this
-    trigger's PSI vs the pinned reference to ``psi_log`` (exactly-once
-    append). ``ref_bins_rows`` is the reference histogram as a dict —
-    ≤B entries, pinned at monitor creation."""
-    n_bins = len(edges) + 1
-    spark_ref = sorted(ref_bins_rows.items())
+def _empty_table(spark, root: str, name: str, ddl: str, key: str):
+    return TxTable.create(
+        spark,
+        os.path.join(root, name),
+        local_frame(spark, [], ddl),
+        stat_cols=[key],
+    )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = delta_for_batch(batch_df, value_col, edges)
-        _fold_merge(bins_tgt, delta, "bin", "n_rows", app_id + "_bins", batch_id)
-        # PSI from the now-final bins state: ≤B rows — bounded by
-        # construction, the monitoring statistic itself
-        ref_df = local_frame(
-            spark, [(int(b), int(n)) for b, n in spark_ref], BINS_SCHEMA
-        )
-        row = (
-            psi_table(bins_tgt.read(), ref_df, n_bins, threshold)
-            .agg(  # every row carries the same total psi
-                F.max("psi").alias("psi"),
-                F.sum("cur_n").cast("bigint").alias("n_rows"),
+
+class _CdcMonitor:
+    """The lifecycle every drift monitor shares (module docstring): a
+    STATE table ``(key, measure)`` folded from the CDC feed, a LOG
+    table with one statistic row per trigger, the foreachBatch sink
+    and the equality twin. A subclass supplies its schemas (``STATE``
+    and ``LOG``: table name + DDL), its reference pin (in
+    ``__init__``), the fold terms, the direct-snapshot twin and its
+    one-row statistic, whose columns are the LOG columns after
+    ``batch_id``."""
+
+    STATE: tuple[str, str]
+    LOG: tuple[str, str]
+
+    def __init__(
+        self, spark: SparkSession, source: TxTable, root: str, app_id: str
+    ):
+        self.spark, self.source, self.app_id = spark, source, app_id
+        (name, ddl), (log_name, log_ddl) = self.STATE, self.LOG
+        self._key, self._measure = (f.split()[0] for f in ddl.split(","))
+        self.state = _empty_table(spark, root, name, ddl, self._key)
+        self.log = _empty_table(spark, root, log_name, log_ddl, "batch_id")
+        # the public per-statistic names: bins/psi_log, vals/ks_log, …
+        setattr(self, name, self.state)
+        setattr(self, log_name, self.log)
+
+    def _fold_terms(self) -> tuple[Column, Column]:
+        """(key, measure) expressions over a change row."""
+        raise NotImplementedError
+
+    def _direct(self, df: DataFrame) -> DataFrame:
+        """The state computed directly from a snapshot."""
+        raise NotImplementedError
+
+    def _stat(self, state: DataFrame) -> DataFrame:
+        """The one-row statistic of a state relation."""
+        raise NotImplementedError
+
+    def _live(self) -> DataFrame:
+        """The maintained state, retracted-to-zero keys hidden."""
+        return self.state.read().filter(F.col(self._measure) != 0)
+
+    def sink(self):
+        """``writeStream.foreachBatch(...)`` sink: fold the batch into
+        the state exactly-once, then append this trigger's statistic
+        row to the log exactly-once."""
+        key, measure = self._key, self._measure
+        state_app = f"{self.app_id}_{self.STATE[0]}"
+
+        def _sink(batch_df: DataFrame, batch_id: int) -> None:
+            k, m = self._fold_terms()
+            delta = ivm.signed_sums(batch_df, {key: k}, {measure: m})
+            ivm.fold_into(
+                self.state, delta, key, [measure], (state_app, batch_id)
             )
-            .first()
+            row = self._stat(self._live()).first()
+            if row is None or None in row:
+                raise ValueError(
+                    f"{type(self).__name__}: statistic undefined after batch "
+                    f"{batch_id} — is the monitored column all NULL, or did "
+                    "the state net to empty?"
+                )
+            self.log.append_stream_batch(
+                local_frame(
+                    batch_df.sparkSession, [(batch_id, *row)], self.LOG[1]
+                ),
+                self.app_id + "_log",
+                batch_id,
+            )
+
+        return _sink
+
+    def assert_consistent(self) -> None:
+        """Equality twin: the maintained state must equal the direct
+        aggregate of the source's CURRENT snapshot, and the last logged
+        row must equal the statistic recomputed from final state."""
+        direct = self._direct(self.source.read()).filter(
+            F.col(self._measure) != 0
         )
-        psi_log.append_stream_batch(
-            local_frame(
-                spark,
-                [(int(batch_id), float(row["psi"]), int(row["n_rows"]))],
-                PSI_LOG_SCHEMA,
-            ),
-            app_id + "_log",
-            batch_id,
-        )
+        mine = self._live()
+        if (
+            mine.exceptAll(direct).limit(1).count()
+            or direct.exceptAll(mine).limit(1).count()
+        ):
+            raise ValueError(
+                f"maintained {self.STATE[0]} diverged from the direct "
+                "snapshot aggregate"
+            )
+        log = self.log.read().orderBy(F.desc("batch_id")).limit(1).first()
+        if log is None:
+            return
+        want = self._stat(self._live()).first()
+        for field, exp in want.asDict().items():
+            got = log[field]
+            if isinstance(exp, float):
+                same = math.isclose(got, exp, rel_tol=1e-9, abs_tol=1e-12)
+            else:
+                same = got == exp
+            if not same:
+                raise ValueError(
+                    f"last logged {field} {got} != recomputed {exp}"
+                )
 
-    return _sink
 
+class DriftMonitor(_CdcMonitor):
+    """PSI monitor: per-bin histogram state (``bins``), the reference
+    histogram pinned as a ≤B-entry dict, one ``psi_log`` row per
+    trigger."""
 
-class DriftMonitor:
-    """Lifecycle wrapper: create the bins + psi_log tables, pin the
-    reference histogram at a source version, and hand out the
-    foreachBatch sink. See the module docstring for semantics."""
+    STATE = ("bins", BINS_SCHEMA)
+    LOG = ("psi_log", PSI_LOG_SCHEMA)
 
     def __init__(
         self,
@@ -230,46 +268,33 @@ class DriftMonitor:
         threshold: float = 0.2,
         app_id: str = "driftmon",
     ):
-        import os
-
-        self.spark = spark
-        self.source = source
         self.value_col = value_col
         self.edges = tuple(float(e) for e in edges)
         self.threshold = threshold
-        self.app_id = app_id
-        self.bins = TxTable.create(
-            spark,
-            os.path.join(root, "bins"),
-            local_frame(spark, [], BINS_SCHEMA),
-            stat_cols=["bin"],
-        )
-        self.psi_log = TxTable.create(
-            spark,
-            os.path.join(root, "psi_log"),
-            local_frame(spark, [], PSI_LOG_SCHEMA),
-            stat_cols=["batch_id"],
-        )
+        super().__init__(spark, source, root, app_id)
         self.ref_bins = {
             int(r["bin"]): int(r["n_rows"])
-            for r in histogram(
-                source.read(version=ref_version), value_col, self.edges
-            ).collect()  # ≤B rows — bounded by construction
+            for r in self._direct(source.read(version=ref_version))
+            .collect()  # ≤B rows — bounded by construction
         }
 
     @property
     def n_bins(self) -> int:
         return len(self.edges) + 1
 
-    def sink(self):
-        return foreach_batch_drift_sink(
-            self.bins,
-            self.psi_log,
-            self.ref_bins,
-            self.value_col,
-            self.edges,
-            self.app_id,
-            self.threshold,
+    def _fold_terms(self):
+        v = F.col(self.value_col)
+        return F.when(v.isNotNull(), bin_expr(v, self.edges)), F.lit(1)
+
+    def _direct(self, df):
+        return histogram(df, self.value_col, self.edges)
+
+    def _stat(self, state):
+        return psi_table(
+            state, self.ref_bins_df(), self.n_bins, self.threshold
+        ).agg(  # every row carries the same total psi
+            F.max("psi").alias("psi"),
+            F.sum("cur_n").cast("bigint").alias("n_rows"),
         )
 
     def ref_bins_df(self) -> DataFrame:
@@ -280,29 +305,8 @@ class DriftMonitor:
     def current_psi(self) -> DataFrame:
         """The per-bin PSI relation from the maintained state."""
         return psi_table(
-            self.bins.read(), self.ref_bins_df(), self.n_bins, self.threshold
+            self._live(), self.ref_bins_df(), self.n_bins, self.threshold
         )
-
-    def assert_consistent(self) -> None:
-        """Equality twin: the maintained histogram must equal the
-        direct binning of the source's CURRENT snapshot, and the last
-        logged PSI must equal the PSI recomputed from final state."""
-        direct = histogram(self.source.read(), self.value_col, self.edges)
-        mine = self.bins.read().filter(F.col("n_rows") != 0)
-        if (
-            mine.exceptAll(direct).limit(1).count()
-            or direct.exceptAll(mine).limit(1).count()
-        ):
-            raise ValueError(
-                "maintained drift histogram diverged from direct binning"
-            )
-        log = self.psi_log.read().orderBy(F.desc("batch_id")).limit(1).first()
-        if log is not None:
-            want = self.current_psi().select("psi").first()["psi"]
-            if not math.isclose(log["psi"], want, rel_tol=1e-9, abs_tol=1e-12):
-                raise ValueError(
-                    f"last logged PSI {log['psi']} != recomputed {want}"
-                )
 
 
 # ---------------------------------------------------------------------------
@@ -338,16 +342,6 @@ def value_counts(df: DataFrame, value_col: str) -> DataFrame:
         df.filter(F.col(value_col).isNotNull())
         .groupBy(F.col(value_col).cast("double").alias("v"))
         .agg(F.count("*").cast("bigint").alias("n_rows"))
-    )
-
-
-def delta_value_counts(batch_df: DataFrame, value_col: str) -> DataFrame:
-    """One micro-batch of CDC rows → per-value signed count delta."""
-    w = ivm.signed_weight()
-    return (
-        batch_df.filter(F.col(value_col).isNotNull())
-        .groupBy(F.col(value_col).cast("double").alias("v"))
-        .agg(F.sum(w).cast("bigint").alias("n_rows"))
     )
 
 
@@ -394,14 +388,16 @@ def ks_stats(cur_vals: DataFrame, ref_vals: DataFrame) -> DataFrame:
     )
 
 
-class KsDriftMonitor:
-    """Streaming two-sample KS monitor over the CDC feed — the
-    DriftMonitor lifecycle with distinct-value state and the prefix-sum
-    ECDF statistic. The reference value-count relation is MATERIALIZED
-    once at monitor creation (its own txlog table — unlike PSI's ≤B
-    bins it is not driver-collectable in general), so per trigger the
-    cost is the change fold + one prefix-sum pass over the value
-    union, never a source rescan."""
+class KsDriftMonitor(_CdcMonitor):
+    """Streaming two-sample KS monitor: distinct-value state (``vals``)
+    and the prefix-sum ECDF statistic. The reference value-count
+    relation is MATERIALIZED once at monitor creation (its own txlog
+    table — unlike PSI's ≤B bins it is not driver-collectable in
+    general), so per trigger the cost is the change fold + one
+    prefix-sum pass over the value union, never a source rescan."""
+
+    STATE = ("vals", VALS_SCHEMA)
+    LOG = ("ks_log", KS_LOG_SCHEMA)
 
     def __init__(
         self,
@@ -412,19 +408,9 @@ class KsDriftMonitor:
         ref_version: int = 0,
         app_id: str = "ksdriftmon",
     ):
-        import os
-
-        self.spark = spark
-        self.source = source
         self.value_col = value_col
-        self.app_id = app_id
-        self.vals = TxTable.create(
-            spark,
-            os.path.join(root, "vals"),
-            local_frame(spark, [], VALS_SCHEMA),
-            stat_cols=["v"],
-        )
-        ref_counts = value_counts(source.read(version=ref_version), value_col)
+        super().__init__(spark, source, root, app_id)
+        ref_counts = self._direct(source.read(version=ref_version))
         if ref_counts.limit(1).count() == 0:
             raise ValueError(
                 "KS reference window has no non-NULL values at version "
@@ -436,77 +422,20 @@ class KsDriftMonitor:
             ref_counts,
             stat_cols=["v"],
         )
-        self.ks_log = TxTable.create(
-            spark,
-            os.path.join(root, "ks_log"),
-            local_frame(spark, [], KS_LOG_SCHEMA),
-            stat_cols=["batch_id"],
+
+    def _fold_terms(self):
+        return F.col(self.value_col).cast("double"), F.lit(1)
+
+    def _direct(self, df):
+        return value_counts(df, self.value_col)
+
+    def _stat(self, state):
+        return ks_stats(state, self.ref_vals.read()).select(
+            "d_stat", "ks_lambda", F.col("n_cur").alias("n_rows")
         )
-
-    def sink(self):
-        vals, ref, log = self.vals, self.ref_vals, self.ks_log
-        value_col, app_id = self.value_col, self.app_id
-
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            spark = batch_df.sparkSession
-            delta = delta_value_counts(batch_df, value_col)
-            _fold_merge(vals, delta, "v", "n_rows", app_id + "_vals", batch_id)
-            row = ks_stats(
-                vals.read().filter(F.col("n_rows") != 0), ref.read()
-            ).first()
-            if row is None or row["d_stat"] is None:
-                raise ValueError(
-                    "KS statistic relation is empty/undefined after batch "
-                    f"{batch_id} — is the monitored column all NULL, or did "
-                    "the state net to empty?"
-                )
-            log.append_stream_batch(
-                local_frame(
-                    spark,
-                    [
-                        (
-                            int(batch_id),
-                            float(row["d_stat"]),
-                            float(row["ks_lambda"]),
-                            int(row["n_cur"]),
-                        )
-                    ],
-                    KS_LOG_SCHEMA,
-                ),
-                app_id + "_log",
-                batch_id,
-            )
-
-        return _sink
 
     def current_ks(self) -> DataFrame:
-        return ks_stats(
-            self.vals.read().filter(F.col("n_rows") != 0),
-            self.ref_vals.read(),
-        )
-
-    def assert_consistent(self) -> None:
-        """The maintained value counts must equal direct counting of
-        the source's CURRENT snapshot, and the last logged D must
-        equal the D recomputed from final state."""
-        direct = value_counts(self.source.read(), self.value_col)
-        mine = self.vals.read().filter(F.col("n_rows") != 0)
-        if (
-            mine.exceptAll(direct).limit(1).count()
-            or direct.exceptAll(mine).limit(1).count()
-        ):
-            raise ValueError(
-                "maintained value counts diverged from direct counting"
-            )
-        log = self.ks_log.read().orderBy(F.desc("batch_id")).limit(1).first()
-        if log is not None:
-            want = self.current_ks().first()["d_stat"]
-            if not math.isclose(
-                log["d_stat"], want, rel_tol=1e-9, abs_tol=1e-12
-            ):
-                raise ValueError(
-                    f"last logged KS D {log['d_stat']} != recomputed {want}"
-                )
+        return ks_stats(self._live(), self.ref_vals.read())
 
 
 # ---------------------------------------------------------------------------
@@ -549,20 +478,6 @@ def day_sums(df: DataFrame, day_col: str, cents_col: str) -> DataFrame:
     )
 
 
-def delta_day_sums(
-    batch_df: DataFrame, day_col: str, cents_col: str
-) -> DataFrame:
-    """One micro-batch of CDC rows → per-day signed cents delta."""
-    w = ivm.signed_weight()
-    return (
-        batch_df.filter(F.col(day_col).isNotNull())
-        .groupBy(
-            F.col(day_col).cast("date").cast("string").alias("day")
-        )
-        .agg(F.sum(F.col(cents_col) * w).cast("bigint").alias("x_cents"))
-    )
-
-
 def cusum_table(days: DataFrame, mu: float, sd: float) -> DataFrame:
     """Two-sided CUSUM (Page 1954; slack k = σ/2, decision h = 4σ —
     the batch cusum_revenue_shift recursion via its closed form
@@ -599,12 +514,14 @@ def cusum_table(days: DataFrame, mu: float, sd: float) -> DataFrame:
     ).orderBy("day")
 
 
-class CusumDriftMonitor:
-    """Streaming CUSUM monitor over the CDC feed — DriftMonitor's
-    lifecycle with per-day integer-cents state and the sequential
-    location statistic. The source table must carry (day_col,
-    cents_col) directly (precompute cents at table-build time so the
-    fold stays exact integer algebra)."""
+class CusumDriftMonitor(_CdcMonitor):
+    """Streaming CUSUM monitor: per-day integer-cents state (``days``)
+    and the sequential location statistic. The source table must carry
+    (day_col, cents_col) directly (precompute cents at table-build time
+    so the fold stays exact integer algebra)."""
+
+    STATE = ("days", DAYS_SCHEMA)
+    LOG = ("cusum_log", CUSUM_LOG_SCHEMA)
 
     def __init__(
         self,
@@ -616,27 +533,11 @@ class CusumDriftMonitor:
         ref_version: int = 0,
         app_id: str = "cusumdriftmon",
     ):
-        import os
-
-        self.spark = spark
-        self.source = source
         self.day_col = day_col
         self.cents_col = cents_col
-        self.app_id = app_id
-        self.days = TxTable.create(
-            spark,
-            os.path.join(root, "days"),
-            local_frame(spark, [], DAYS_SCHEMA),
-            stat_cols=["day"],
-        )
-        self.cusum_log = TxTable.create(
-            spark,
-            os.path.join(root, "cusum_log"),
-            local_frame(spark, [], CUSUM_LOG_SCHEMA),
-            stat_cols=["batch_id"],
-        )
+        super().__init__(spark, source, root, app_id)
         ref = (
-            day_sums(source.read(version=ref_version), day_col, cents_col)
+            self._direct(source.read(version=ref_version))
             .select((F.col("x_cents").cast("double") / 100.0).alias("x"))
             .agg(F.avg("x").alias("mu"), F.stddev_samp("x").alias("sd"))
             .first()
@@ -650,91 +551,20 @@ class CusumDriftMonitor:
         self.mu = float(ref["mu"])
         self.sd = float(ref["sd"])
 
-    def sink(self):
-        days, log = self.days, self.cusum_log
-        day_col, cents_col, app_id = self.day_col, self.cents_col, self.app_id
-        mu, sd = self.mu, self.sd
+    def _fold_terms(self):
+        day = F.col(self.day_col).cast("date").cast("string")
+        return day, F.col(self.cents_col)
 
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            spark = batch_df.sparkSession
-            delta = delta_day_sums(batch_df, day_col, cents_col)
-            _fold_merge(days, delta, "day", "x_cents", app_id + "_days", batch_id)
-            c = cusum_table(
-                days.read().filter(F.col("x_cents") != 0), mu, sd
-            )
-            row = c.agg(
-                F.max("cusum_up_sigma").alias("up"),
-                F.max("cusum_down_sigma").alias("down"),
-                F.max(F.col("alarm").cast("int")).alias("alarm"),
-                F.count("*").cast("bigint").alias("n_days"),
-            ).first()
-            if row is None or row["up"] is None:
-                raise ValueError(
-                    "CUSUM statistic relation is empty after batch "
-                    f"{batch_id} — is the day/cents state all NULL or "
-                    "netted to empty?"
-                )
-            log.append_stream_batch(
-                local_frame(
-                    spark,
-                    [
-                        (
-                            int(batch_id),
-                            float(row["up"]),
-                            float(row["down"]),
-                            bool(row["alarm"]),
-                            int(row["n_days"]),
-                        )
-                    ],
-                    CUSUM_LOG_SCHEMA,
-                ),
-                app_id + "_log",
-                batch_id,
-            )
+    def _direct(self, df):
+        return day_sums(df, self.day_col, self.cents_col)
 
-        return _sink
+    def _stat(self, state):
+        return cusum_table(state, self.mu, self.sd).agg(
+            F.max("cusum_up_sigma").alias("max_up"),
+            F.max("cusum_down_sigma").alias("max_down"),
+            F.max("alarm").alias("alarm"),
+            F.count("*").cast("bigint").alias("n_days"),
+        )
 
     def current_cusum(self) -> DataFrame:
-        return cusum_table(
-            self.days.read().filter(F.col("x_cents") != 0), self.mu, self.sd
-        )
-
-    def assert_consistent(self) -> None:
-        """Maintained day sums must equal direct summing of the
-        source's CURRENT snapshot; the last logged maxima must equal
-        the maxima recomputed from final state."""
-        direct = day_sums(self.source.read(), self.day_col, self.cents_col)
-        direct = direct.filter(F.col("x_cents") != 0)
-        mine = self.days.read().filter(F.col("x_cents") != 0)
-        if (
-            mine.exceptAll(direct).limit(1).count()
-            or direct.exceptAll(mine).limit(1).count()
-        ):
-            raise ValueError(
-                "maintained day sums diverged from direct summing"
-            )
-        log = (
-            self.cusum_log.read().orderBy(F.desc("batch_id")).limit(1).first()
-        )
-        if log is not None:
-            want = self.current_cusum().agg(
-                F.max("cusum_up_sigma").alias("up"),
-                F.max("cusum_down_sigma").alias("down"),
-                F.max(F.col("alarm").cast("int")).alias("alarm"),
-                F.count("*").cast("bigint").alias("n_days"),
-            ).first()
-            for field, got_v, want_v in (
-                ("max_up", log["max_up"], want["up"]),
-                ("max_down", log["max_down"], want["down"]),
-            ):
-                if not math.isclose(got_v, want_v, rel_tol=1e-9, abs_tol=1e-12):
-                    raise ValueError(
-                        f"last logged CUSUM {field} {got_v} != recomputed {want_v}"
-                    )
-            if bool(log["alarm"]) != bool(want["alarm"]) or int(
-                log["n_days"]
-            ) != int(want["n_days"]):
-                raise ValueError(
-                    f"last logged CUSUM alarm/n_days {log['alarm']}/{log['n_days']} "
-                    f"!= recomputed {want['alarm']}/{want['n_days']}"
-                )
+        return cusum_table(self._live(), self.mu, self.sd)

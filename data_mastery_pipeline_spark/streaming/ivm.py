@@ -1,8 +1,20 @@
-"""Incremental view maintenance over the transaction log's streaming
-CDC — the capstone composition of the storage layer: a txlog SOURCE
-table streams its change feed (``txlog_feed`` with ``mode="cdf"``),
-and a foreachBatch sink folds each micro-batch's retraction rows into
-a txlog TARGET aggregate table with an EXACTLY-ONCE keyed merge.
+"""Incremental view maintenance over the transaction log's CDC — the
+ONE home of the change-feed retraction fold. Every consumer of a txlog
+change feed folds through the pieces below, so each rule exists once:
+
+- :func:`signed_weight` — +1 per insert, −1 per delete (also the
+  netting weight of scd.py, wap.py and search.py);
+- :func:`cents` — double measures as integer cents;
+- :func:`signed_sums` — per-key ``sum(w · m)``, NULL keys dropped;
+- :func:`fold_into` — the read-modify-write merge of a delta into a
+  txlog state table, exactly-once under a ``stream_txn`` watermark;
+- :func:`drain_cdf` — the ``txlog_feed`` → foreachBatch →
+  ``availableNow`` drain.
+
+Consumers: the streaming sum/count view (:func:`foreach_batch_view_sink`),
+the materialized views (mv.py ``SumCountView`` / ``JoinAggView``, and
+``MinMaxView``'s per-value netting) and the PSI/KS/CUSUM drift monitors
+(drift.py).
 
 Why this shape survives 100 TB:
 
@@ -17,17 +29,17 @@ Why this shape survives 100 TB:
   re-delivers the last batch after any restart, and a READ-MODIFY-WRITE
   sink applied twice corrupts the aggregate — the watermark (checked
   inside the commit retry loop, so even concurrent replays serialize
-  through the log's put-if-absent) makes the replay a no-op.
+  through the log's put-if-absent) makes the replay a no-op. A delta
+  that folds to zero rows still records its watermark, so a consumer
+  can always declare itself caught up.
 
-The maintained measures are count and an INTEGER cents sum: integer
-deltas commute and associate EXACTLY, so the incrementally-maintained
-table equals the direct aggregate bit-for-bit regardless of batch
-boundaries or accumulation order — floating-point sums would drift at
-the ulp level and break value-hash equality. (A float measure works
-operationally; it just can't promise hash-exact parity, which is the
-contract this module tests against.)
+The maintained measures are counts and INTEGER sums: integer deltas
+commute and associate EXACTLY, so the incrementally-maintained table
+equals the direct aggregate bit-for-bit regardless of batch boundaries
+or accumulation order — floating-point sums would drift at the ulp
+level and break value-hash equality.
 
-Retracted-to-zero keys stay as ``n_rows = 0`` tombstone rows in the
+Retracted-to-zero keys stay as zero-measure tombstone rows in the
 target (the merge path has no delete leg); :func:`current_view`
 filters them — the standard IVM tombstone convention.
 
@@ -39,23 +51,23 @@ repo's own log format, CDC source, and exactly-once merge.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.txlog import TxTable
+from ..sources.txlog import TxTable, register
 
-MV_SCHEMA_SUFFIX = "n_rows bigint, sum_cents bigint"
+MEASURES = ("n_rows", "sum_cents")
 
 
 def mv_schema(key: str, key_type: str) -> str:
     """DDL for a sum/count view keyed by ``key``."""
-    return f"{key} {key_type}, {MV_SCHEMA_SUFFIX}"
+    return f"{key} {key_type}, n_rows bigint, sum_cents bigint"
 
 
 def signed_weight():
-    """+1 per CDC insert, −1 per delete — THE retraction fold weight.
-    Shared by this module and mv.py so the two maintained-view paths
-    (streaming IVM, batch-incremental MV) cannot drift semantically."""
+    """+1 per CDC insert, −1 per delete — THE retraction fold weight."""
     return F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
         F.lit(-1)
     )
@@ -64,68 +76,104 @@ def signed_weight():
 def cents(col) -> "F.Column":
     """Integer cents of a double measure (NULL → 0): integer deltas
     commute exactly, which is what makes maintained sums bit-equal to
-    direct aggregates under any batch boundaries. Shared with mv.py."""
+    direct aggregates under any batch boundaries."""
     return F.coalesce(
         F.floor(col * 100 + F.lit(0.5)).cast("bigint"), F.lit(0)
     )
 
 
-def delta_for_batch(batch_df: DataFrame, key: str, value_col: str) -> DataFrame:
-    """One micro-batch of CDC rows → per-key signed delta:
-    ``n_rows`` (+1 insert / −1 delete) and ``sum_cents`` (signed,
-    integer cents of ``value_col``; NULL values contribute 0).
+def signed_sums(
+    cdf: DataFrame, keys: dict[str, Column], measures: dict[str, Column]
+) -> DataFrame:
+    """CDC rows → per-key signed delta: one bigint ``sum(w · m)`` per
+    measure (``m = F.lit(1)`` is the signed count), grouped by the
+    ``keys`` (output name → expression over a change row).
 
-    NULL group keys are EXCLUDED here: the source table does not
-    constrain the key non-null, and a NULL-key delta row would make
+    Rows with a NULL key are EXCLUDED: the source does not constrain
+    keys non-null, and a NULL-key delta row would make
     :meth:`TxTable.merge_upsert` raise ("NULL update keys") on every
-    trigger — wedging the maintained view permanently. Dropping them
-    means the view simply carries no row for the NULL group (the same
-    choice Delta's MERGE makes: NULL never equi-matches a key anyway);
-    a deployment that needs the NULL group aggregates it under a
-    sentinel key upstream (ADVICE r6)."""
-    w = signed_weight()
-    c = cents(F.col(value_col))
-    return (
-        batch_df.filter(F.col(key).isNotNull())
-        .groupBy(key)
-        .agg(
-            F.sum(w).cast("bigint").alias("n_rows"),
-            F.sum(w * c).cast("bigint").alias("sum_cents"),
-        )
+    trigger — wedging the maintained state permanently. The view
+    simply carries no NULL group (the choice Delta's MERGE makes: NULL
+    never equi-matches a key); a deployment that needs the NULL group
+    aggregates it under a sentinel key upstream."""
+    rows = cdf.select(
+        *[e.alias(k) for k, e in keys.items()],
+        signed_weight().alias("__w"),
+        *[m.alias(f"__m_{n}") for n, m in measures.items()],
+    ).dropna(subset=list(keys))
+    return rows.groupBy(*keys).agg(
+        *[
+            F.sum(F.col("__w") * F.col(f"__m_{n}")).cast("bigint").alias(n)
+            for n in measures
+        ]
     )
+
+
+def fold_into(
+    target: TxTable,
+    delta: DataFrame,
+    key: str,
+    measures: Sequence[str],
+    stream_txn: tuple[str, int],
+    carry: Sequence[str] = (),
+) -> int | None:
+    """Read-modify-write ``delta`` into ``target`` exactly-once: each
+    touched key's row becomes ``coalesce(current, 0) + delta`` per
+    measure (``carry`` columns ride along from the delta unchanged),
+    upserted under the ``stream_txn`` watermark. A replayed
+    ``stream_txn`` commits nothing; an empty delta still records its
+    watermark (merge_upsert's empty-batch rule). Returns merge_upsert's
+    result. Lazy up to the merge — no Spark action of its own."""
+    cur = target.read().select(
+        key, *[F.col(m).alias(f"__cur_{m}") for m in measures]
+    )
+    merged = delta.join(cur, key, "left").select(
+        key,
+        *carry,
+        *[
+            (F.coalesce(F.col(f"__cur_{m}"), F.lit(0)) + F.col(m))
+            .cast("bigint")
+            .alias(m)
+            for m in measures
+        ],
+    )
+    return target.merge_upsert(merged, key, stream_txn=stream_txn)
 
 
 def foreach_batch_view_sink(
     target: TxTable, key: str, value_col: str, app_id: str
 ):
     """``writeStream.foreachBatch(...)`` sink maintaining ``target`` as
-    the sum/count view of a CDC stream. Read-modify-write per batch:
-    current values for the touched keys join the delta, and the merged
-    rows upsert with the batch's txn watermark (exactly-once)."""
+    the sum/count view (:func:`mv_schema`) of a CDC stream, one
+    exactly-once :func:`fold_into` per micro-batch."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        delta = delta_for_batch(batch_df, key, value_col)
-        cur = target.read().select(
-            F.col(key),
-            F.col("n_rows").alias("__cur_n"),
-            F.col("sum_cents").alias("__cur_s"),
+        delta = signed_sums(
+            batch_df,
+            {key: F.col(key)},
+            {"n_rows": F.lit(1), "sum_cents": cents(F.col(value_col))},
         )
-        merged = (
-            delta.join(cur, key, "left")
-            .select(
-                F.col(key),
-                (
-                    F.coalesce(F.col("__cur_n"), F.lit(0)) + F.col("n_rows")
-                ).alias("n_rows"),
-                (
-                    F.coalesce(F.col("__cur_s"), F.lit(0))
-                    + F.col("sum_cents")
-                ).alias("sum_cents"),
-            )
-        )
-        target.merge_upsert(merged, key, stream_txn=(app_id, batch_id))
+        fold_into(target, delta, key, MEASURES, (app_id, batch_id))
 
     return _sink
+
+
+def drain_cdf(source: TxTable, sink, checkpoint: str) -> None:
+    """Drain ``source``'s change feed (``txlog_feed``, ``mode="cdf"``)
+    through a foreachBatch ``sink``: every commit the ``checkpoint``
+    has not yet delivered, then stop (``availableNow``)."""
+    register(source.spark)
+    (
+        source.spark.readStream.format("txlog_feed")
+        .option("root", source.root)
+        .option("mode", "cdf")
+        .load()
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def current_view(target: TxTable) -> DataFrame:

@@ -40,6 +40,7 @@ import os
 from pyspark.sql import functions as F
 
 from .sources.txlog import TxTable
+from .streaming.ivm import signed_weight
 
 
 class WapBranch:
@@ -86,9 +87,7 @@ class WapBranch:
                 "WAP publish: source columns named __net/__i collide "
                 "with internal aliases — rename them first"
             )
-        w = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
-            F.lit(-1)
-        )
+        w = signed_weight()
         from .checkpointing import release, truncate_lineage
 
         # ONE evaluation of the delta fold — it feeds the retraction

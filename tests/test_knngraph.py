@@ -132,3 +132,18 @@ def test_oracle_sql_blocking_is_in_lockstep(spark):
 
     for j in range(knngraph.POOL_BITS):
         assert f"WHEN v[{j + 1}] > 0 THEN {1 << j} ELSE" in _KNN_SIGN_TERMS
+    # and both engines read a vector narrower than the pool the same
+    # way: past-the-end dimensions contribute bit 0
+    import duckdb
+    from pyspark.sql import functions as F
+
+    vec = [1.0, -2.0, 3.0]
+    want = duckdb.sql(
+        f"SELECT {_KNN_SIGN_TERMS} FROM (SELECT {vec}::DOUBLE[] AS v)"
+    ).fetchone()[0]
+    got = (
+        spark.createDataFrame([(vec,)], "v array<double>")
+        .select(knngraph.sign_bits_expr(F.col("v")).alias("b"))
+        .first()["b"]
+    )
+    assert got == want == 5

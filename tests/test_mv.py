@@ -424,3 +424,46 @@ def test_null_dims_excluded_and_tombstones_hidden(spark, root):
     view.refresh()
     assert _mv(view, "grp") == []  # tombstone hidden
     assert view.target.read().filter("n_rows = 0").count() == 1
+
+
+def test_fold_into_contract(spark, root):
+    """streaming/ivm.py's one change-feed fold: signed sums of two
+    batches add up in the target, a replayed batch id commits nothing,
+    an empty delta still advances the watermark, NULL keys never
+    land."""
+    from data_mastery_pipeline_spark.streaming import ivm
+
+    tgt = TxTable.create(
+        spark,
+        root + "/fold",
+        spark.createDataFrame([], ivm.mv_schema("k", "string")),
+        stat_cols=["k"],
+    )
+
+    def fold(rows, batch_id):
+        cdf = spark.createDataFrame(
+            rows, "k string, v double, _change_type string"
+        )
+        delta = ivm.signed_sums(
+            cdf,
+            {"k": F.col("k")},
+            {"n_rows": F.lit(1), "sum_cents": ivm.cents(F.col("v"))},
+        )
+        return ivm.fold_into(
+            tgt, delta, "k", ivm.MEASURES, ("app", batch_id)
+        )
+
+    def state():
+        return sorted(tuple(r) for r in tgt.read().collect())
+
+    fold([("a", 1.0, "insert"), ("b", 2.5, "insert"), (None, 9.0, "insert")], 0)
+    assert state() == [("a", 1, 100), ("b", 1, 250)]  # NULL key dropped
+    fold([("a", 0.5, "insert"), ("b", 2.5, "delete"), ("c", None, "insert")], 1)
+    want = [("a", 2, 150), ("b", 0, 0), ("c", 1, 0)]
+    assert state() == want
+    v = tgt.version()
+    assert fold([("a", 7.0, "insert")], 1) is None  # replay: no-op
+    assert tgt.version() == v and state() == want
+    fold([(None, 1.0, "insert")], 2)  # folds to an empty delta
+    assert tgt.last_stream_batch("app") == 2  # None at merge_upsert's old rule
+    assert tgt.version() == v + 1 and state() == want

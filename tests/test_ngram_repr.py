@@ -261,3 +261,10 @@ def test_blocked_pair_builders_on_degenerate_input(spark, monkeypatch):
     for rows in ([], [(1, vec)]):
         emb = spark.createDataFrame(rows, emb_schema)
         assert blocked_knn_graph(emb).collect() == [], rows
+    # narrower than the pool: bits past the last dimension are 0, and
+    # two identical 3-d vectors share a cell
+    emb = spark.createDataFrame(
+        [(1, [1.0, -2.0, 3.0]), (2, [1.0, -2.0, 3.0])], emb_schema
+    )
+    pairs = {(r["qid"], r["nbr_id"]) for r in blocked_knn_graph(emb).collect()}
+    assert pairs == {(1, 2), (2, 1)}

@@ -12,11 +12,31 @@ and this file makes it diffable. Run from the repo root:
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
+
+# a txlog scan pushes its live-file list as ``In(path, [data/<dir>/part-…``;
+# the directory and file ids are random per write
+_TXLOG_FILE = re.compile(r"data/[0-9a-f]{32}/(part-\d+)-[0-9a-f-]{36}")
+_PATH_IN = re.compile(r"In\(path, \[([^\]]*)")
+
+
+def _stable(pushed: str) -> str:
+    """Mask the random ids of a pushed txlog file list (one entry per
+    file is kept) and sort it, so regeneration is byte-stable."""
+
+    def mask(m: re.Match) -> str:
+        files = [
+            _TXLOG_FILE.sub(r"data/<id>/\1-<id>", f)
+            for f in m.group(1).split(",")
+        ]
+        return "In(path, [" + ",".join(sorted(files))
+
+    return _PATH_IN.sub(mask, pushed)
 
 
 def main() -> None:
@@ -59,7 +79,7 @@ def main() -> None:
         pushed = plans.pushed_filters(df)
         schemas = plans.read_schema_columns(df)
         for i, cols in enumerate(schemas):
-            pf = pushed[i] if i < len(pushed) else ""
+            pf = _stable(pushed[i]) if i < len(pushed) else ""
             cols_s = ", ".join(cols) if cols else "(partition cols only)"
             print(f"- scan {i}: reads [{cols_s}]" + (f"; pushed: `{pf}`" if pf else ""))
         print()

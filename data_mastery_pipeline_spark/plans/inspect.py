@@ -29,10 +29,18 @@ def formatted_plan(df: DataFrame) -> str:
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
-    """Filter predicates pushed into the parquet scans (one string per
-    scan; empty string means a scan with nothing pushed)."""
-    plan = formatted_plan(df)
-    return [m.group(1).strip() for m in re.finditer(r"PushedFilters: \[(.*?)\]", plan)]
+    """Filter predicates pushed into the file scans, one string per scan
+    in :func:`read_schema_columns` order; empty string means a scan with
+    nothing pushed, including a scan that prints no PushedFilters line
+    (one reading ``_metadata`` columns). The list runs to the LAST ``]``
+    of its line: a pushed filter can hold brackets of its own
+    (``In(path, [...])``)."""
+    out = []
+    for node in re.split(r"\n\(\d+\) ", formatted_plan(df)):
+        if re.search(r"^ReadSchema: ", node, re.M):
+            m = re.search(r"^PushedFilters: \[(.*)\]", node, re.M)
+            out.append(m.group(1).strip() if m else "")
+    return out
 
 
 def _split_top_level(body: str) -> list[str]:

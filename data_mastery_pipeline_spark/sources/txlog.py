@@ -30,13 +30,28 @@ Layout::
 
 Actions are JSON objects, one per line of a commit file:
 
-    {"meta":   {"schema_json": …, "stat_cols": […]}}
-    {"add":    {"path": "data/…/part-….parquet", "size": …,
-                "num_records": …, "stats": {col: [min, max, n_null]}}}
-    {"remove": {"path": …}}
-    {"commit": {"op": "create|append|delete|merge|optimize",
-                "read_version": …, "predicate": {col: [lo, hi]} | null,
-                "txn": "<uuid>"}}
+    {"meta":     {"schema_json": …, "stat_cols": […],
+                  "constraints": {name: sql}, "column_mapping": {…}}}
+    {"remove":   {"path": …}}
+    {"add":      {"path": "data/…/part-….parquet", "size": …,
+                  "num_records": …, "stats": {col: [min, max, n_null]}}}
+    {"dv":       {"paths": [sidecar …], "files": {path: n_deleted},
+                  "num_deleted": …}}
+    {"txn":      {"app_id": …, "batch_id": …}}
+    {"bloomidx": {"path": …, "col": …, "m": …, "k": …, "bits": …}}
+    {"commit":   {"op": …, "read_version": …,
+                  "predicate": {col: [lo, hi]} | null,
+                  "txn": "<uuid>", "ts": …}}
+
+``meta`` replaces the table metadata (``constraints`` and
+``column_mapping`` only once set); ``dv`` is a deletion vector, a
+parquet sidecar of ``(path, pos)`` rows; ``txn`` is a streaming
+writer's exactly-once watermark; ``bloomidx`` is an advisory per-file
+bloom filter. The op names are ``create``, ``clone``, ``append``,
+``txn_mark``, ``delete``, ``delete_dv``, ``update``, ``update_dv``,
+``replace``, ``merge``, ``optimize`` (compaction and
+``purge_deletes``), ``restore``, ``alter`` (every metadata change) and
+``bloomidx``.
 
 Commit protocol (the crux): data files are staged under a fresh
 ``data/<txn-uuid>/`` dir first (invisible — readers only see files the
@@ -53,20 +68,28 @@ swaps one method, mirroring Delta's pluggable LogStore.
 Conflict rules (optimistic concurrency, checked by the loser of the
 race, over the commits interleaved since its snapshot):
 
-- ``append``/``create`` never conflict with DATA commits — a blind add
-  commutes with anything; the committer silently retries at the next
-  version.
-- ``delete``/``merge`` conflict when an interleaved commit (a) removed
-  a file this txn also removes (write-write on the same rows), or (b)
-  added a file whose stats overlap this txn's predicate (the rewrite
-  was computed against a snapshot that no longer covers the predicate).
-- ``optimize`` conflicts only on rule (a): concurrent appends are fine
+- A txn's GUARDED files are the files it removes plus its DV targets
+  (the files its deletion vector deletes rows from).
+- ``append``/``txn_mark``/``bloomidx`` guard nothing and never conflict
+  with DATA commits — a blind add commutes with anything; the committer
+  silently retries at the next version. (``create`` must own version
+  0: any visible commit is a ConflictError.)
+- Every op conflicts when an interleaved commit (a) removed a guarded
+  file, or (b) committed a deletion vector on a guarded file (write-
+  write on the same rows, or positions into a dead file). So
+  ``optimize`` conflicts only here: concurrent appends are fine
   (compaction of old files commutes with new data), concurrent removal
-  of a compaction input is not.
-- METADATA commits (``alter_add_column``) serialize against
-  everything: any txn that planned under the old schema — appends
-  included — fails with ConflictError and must re-plan, and two
-  concurrent alters collide (the public formats' metadata-update rule).
+  of, or DV on, a compaction input is not.
+- ``delete``/``delete_dv``/``update``/``update_dv``/``replace``/
+  ``merge`` also conflict when (c) an interleaved commit added a file
+  whose stats overlap this txn's predicate (the rewrite was computed
+  against a snapshot that no longer covers the predicate).
+- ``restore`` conflicts with ANY interleaved remove, dv or add: its
+  file diff was computed against one snapshot.
+- METADATA commits (every ``alter``) serialize against everything: any
+  txn that planned under the old schema — appends included — fails
+  with ConflictError and must re-plan, and two concurrent alters
+  collide (the public formats' metadata-update rule).
 
 No hive partition dirs: file-level statistics subsume partition pruning
 (a predicate on ANY stat column skips files, not just the one blessed
@@ -88,8 +111,9 @@ import os
 import re
 import time
 import uuid
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -171,6 +195,35 @@ def _overlaps(stats: dict, col: str, lo, hi) -> bool:
         return True
     mn, mx, _ = s
     return mx >= lo and mn <= hi
+
+
+def _between(col: str, lo, hi):
+    """``col BETWEEN lo AND hi`` with NULL never matching (ANSI DML:
+    a NULL predicate value neither deletes nor updates nor replaces)."""
+    return F.coalesce(
+        (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)), F.lit(False)
+    )
+
+
+class _Snapshot(NamedTuple):
+    """One replayed version with its schema and column mapping decoded
+    (:meth:`TxTable._snapshot`) — the planning state a verb reads."""
+
+    version: int
+    meta: dict
+    live: dict
+    dvs: dict
+    schema: T.StructType
+    mapping: dict | None
+
+    def overlapping(self, col: str, lo, hi) -> tuple[str, list[str]]:
+        """(physical name of ``col``, sorted live files whose log stats
+        overlap ``col ∈ [lo, hi]``) — the only files a range verb over
+        ``col`` reads or rewrites."""
+        pcol = (self.mapping or {}).get(col, col)
+        return pcol, sorted(
+            p for p, a in self.live.items() if _overlaps(a["stats"], pcol, lo, hi)
+        )
 
 
 class TxTable:
@@ -410,6 +463,25 @@ class TxTable:
             raise VersionExpiredError(f"no metadata replayable at v{version}")
         return meta, live, txns, dvs
 
+    def _snapshot(self, version: int | None = None) -> _Snapshot:
+        """:meth:`_state_at` of ``version`` (default: the latest), with
+        the schema and column mapping decoded once."""
+        v = self.version() if version is None else version
+        meta, live, _, dvs = self._state_at(v)
+        return _Snapshot(
+            v, meta, live, dvs, self._schema(meta), self._col_mapping(meta)
+        )
+
+    @staticmethod
+    def _schema(meta: dict) -> T.StructType:
+        """The logical schema a ``meta`` action records."""
+        return T.StructType.fromJson(json.loads(meta["schema_json"]))
+
+    @staticmethod
+    def _op(actions: list[dict]) -> str:
+        """The op name of one parsed commit."""
+        return next((a["commit"]["op"] for a in actions if "commit" in a), "?")
+
     def version(self) -> int:
         v = self._latest_version()
         if v < 0:
@@ -417,8 +489,7 @@ class TxTable:
         return v
 
     def schema(self) -> T.StructType:
-        meta, _, _, _ = self._state_at(self.version())
-        return T.StructType.fromJson(json.loads(meta["schema_json"]))
+        return self._snapshot().schema
 
     def snapshot_adds(self, version: int | None = None) -> list[dict]:
         """The live file entries (path/size/num_records/stats) at a
@@ -433,16 +504,14 @@ class TxTable:
         vs, _ = self._list_log()
         out = []
         for v in vs:
-            ops = [a["commit"] for a in self._parse_commit(v) if "commit" in a]
-            n_add = sum(1 for a in self._parse_commit(v) if "add" in a)
-            n_rm = sum(1 for a in self._parse_commit(v) if "remove" in a)
-            info = ops[0] if ops else {}
+            actions = self._parse_commit(v)
+            info = next((a["commit"] for a in actions if "commit" in a), {})
             out.append(
                 {
                     "version": v,
                     "op": info.get("op", "?"),
-                    "n_adds": n_add,
-                    "n_removes": n_rm,
+                    "n_adds": sum("add" in a for a in actions),
+                    "n_removes": sum("remove" in a for a in actions),
                     "txn": info.get("txn", ""),
                 }
             )
@@ -567,7 +636,7 @@ class TxTable:
         in field order); no-op if mapping already exists."""
         if meta.get("column_mapping"):
             return meta
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+        schema = TxTable._schema(meta)
         meta = dict(meta)
         meta["column_mapping"] = {
             "columns": [
@@ -606,20 +675,65 @@ class TxTable:
             F.expr(f"substring(_metadata.file_path, {len(prefix) + 1})"),
         ).otherwise(F.expr("substring(_metadata.file_path, 6)"))
 
-    def _dv_frame(self, dvs: dict, restrict: set[str] | None = None):
-        """The live deletion-vector relation ``(path, pos)`` — one scan
-        over every live DV sidecar, optionally restricted to a file
-        subset (rows for other files are correct but dead weight when
-        the caller only reads ``restrict``). None when no DVs exist."""
-        paths = sorted(p for e in dvs.values() for p in e["paths"])
-        if not paths:
-            return None
-        df = self.spark.read.schema(self._DV_SCHEMA).parquet(
+    def _read_dv(self, paths) -> DataFrame:
+        """The ``(path, pos)`` rows of the given DV sidecar files."""
+        return self.spark.read.schema(self._DV_SCHEMA).parquet(
             *[os.path.join(self.root, p) for p in paths]
         )
-        if restrict is not None:
-            df = df.filter(F.col("path").isin(sorted(restrict)))
-        return df
+
+    def _dv_frame(self, dvs: dict, rels) -> DataFrame | None:
+        """The rows of the vectors in ``dvs`` that delete from ``rels`` —
+        one scan over just the sidecars that touch them (one sidecar can
+        span many data files, hence the path filter). None when no
+        vector touches ``rels``."""
+        rels = set(rels)
+        paths = sorted(
+            p
+            for e in dvs.values()
+            if not rels.isdisjoint(e["files"])
+            for p in e["paths"]
+        )
+        if not paths:
+            return None
+        return self._read_dv(paths).filter(F.col("path").isin(sorted(rels)))
+
+    def _scan_files(self, schema, mapping, rels, *extra) -> DataFrame:
+        """``rels`` read under the enforced PHYSICAL schema and projected
+        to LOGICAL names (``mapping``; identity when None), plus
+        ``extra`` columns."""
+        m = mapping or {}
+        return (
+            self.spark.read.schema(self._phys_struct(schema, mapping))
+            .parquet(*[os.path.join(self.root, r) for r in sorted(rels)])
+            .select(
+                *[F.col(m.get(f.name, f.name)).alias(f.name) for f in schema.fields],
+                *extra,
+            )
+        )
+
+    def _positions(
+        self, schema, mapping, rels, dv=None, how: str = "left_anti"
+    ) -> DataFrame:
+        """The positional scan: :meth:`_scan_files` plus each row's
+        ``__rel`` (log path) and ``__pos`` (its physical ordinal in the
+        file) — the ``(file, row_index)`` key every deletion vector is
+        written in. ``dv``, a ``(path, pos)`` relation, is joined on
+        that key with ``how``: ``left_anti`` keeps the rows it has not
+        deleted, ``left_semi`` only the rows it deleted."""
+        df = self._scan_files(
+            schema,
+            mapping,
+            rels,
+            self._rel_path_col().alias("__rel"),
+            F.col("_metadata.row_index").cast("bigint").alias("__pos"),
+        )
+        if dv is None:
+            return df
+        return df.join(
+            dv.select(F.col("path").alias("__rel"), F.col("pos").alias("__pos")),
+            ["__rel", "__pos"],
+            how,
+        )
 
     def _read_files(
         self,
@@ -631,34 +745,18 @@ class TxTable:
         """Scan ``rels`` under the enforced PHYSICAL schema, apply
         deletion vectors (rows whose ``(file, row_index)`` appear in a
         live DV are anti-joined away), then project physical → logical
-        names (``mapping``; identity when None). The DV side is tiny
-        relative to the scan (deleted rows only), so Catalyst/AQE plans
-        a broadcast anti-join — the merge-on-read cost is one broadcast
-        probe per row, no shuffle of the table side."""
+        names (``mapping``; identity when None). A plain scan when no
+        vector touches ``rels``. The DV side is tiny relative to the
+        scan (deleted rows only), so Catalyst/AQE plans a broadcast
+        anti-join — the merge-on-read cost is one broadcast probe per
+        row, no shuffle of the table side."""
         if not rels:
             return self.spark.createDataFrame([], schema)
-        df = self.spark.read.schema(self._phys_struct(schema, mapping)).parquet(
-            *[os.path.join(self.root, r) for r in sorted(rels)]
-        )
-        m = mapping or {}
-        logical = [
-            F.col(m.get(f.name, f.name)).alias(f.name)
-            for f in schema.fields
-        ]
-        dv = self._dv_frame(dvs, restrict=set(rels))
+        dv = self._dv_frame(dvs, rels)
         if dv is None:
-            return df.select(*logical)
-        return (
-            df.withColumn("__rel", self._rel_path_col())
-            .withColumn("__pos", F.col("_metadata.row_index"))
-            .join(
-                dv.select(
-                    F.col("path").alias("__rel"), F.col("pos").alias("__pos")
-                ),
-                ["__rel", "__pos"],
-                "left_anti",
-            )
-            .select(*logical)
+            return self._scan_files(schema, mapping, rels)
+        return self._positions(schema, mapping, rels, dv).select(
+            *schema.fieldNames()
         )
 
     def read(
@@ -676,13 +774,8 @@ class TxTable:
             if version is not None:
                 raise ValueError("pass version OR as_of, not both")
             version = self.version_at_timestamp(as_of)
-        meta, live, _, dvs = self._state_at(
-            self.version() if version is None else version
-        )
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
-        return self._read_files(
-            schema, sorted(live), dvs, self._col_mapping(meta)
-        )
+        s = self._snapshot(version)
+        return self._read_files(s.schema, sorted(s.live), s.dvs, s.mapping)
 
     def scan(self, preds: dict) -> tuple[DataFrame, dict]:
         """Stats-pruned read: ``{col: (lo, hi)}`` conjunctive ranges.
@@ -691,8 +784,8 @@ class TxTable:
         (the same coordinator-artifact contract as manifest.py, minus
         its build scan). Residual row filters are re-applied; the
         result is exact, pruning is only a file-count optimization."""
-        meta, live, _, dvs = self._state_at(self.version())
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+        s = self._snapshot()
+        meta, live, schema = s.meta, s.live, s.schema
         # stats are keyed by PHYSICAL name (stable across renames, so
         # pre-rename files keep pruning) — translate the predicates
         phys_preds = dict(
@@ -748,7 +841,7 @@ class TxTable:
             "files_bloom_pruned": bloom_pruned,
         }
         df = self._read_files(
-            schema, [a["path"] for a in keep], dvs, self._col_mapping(meta)
+            schema, [a["path"] for a in keep], s.dvs, s.mapping
         )
         for c, (lo, hi) in preds.items():
             df = df.filter((F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi)))
@@ -803,110 +896,26 @@ class TxTable:
             )
         if start_version > end:
             raise ValueError(f"empty range: ({start_version}, {end}]")
-        meta, _, _, _ = self._state_at(end)
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
-        mapping = self._col_mapping(meta)
-        phys = self._phys_struct(schema, mapping)
-        m = mapping or {}
-        logical = [
-            F.col(m.get(f.name, f.name)).alias(f.name)
-            for f in schema.fields
-        ]
-        cols = [f.name for f in schema.fields]
-        commits = {
-            v: self._parse_commit(v) for v in range(start_version + 1, end + 1)
-        }  # raises VersionExpiredError if the range itself is gone
-        # DV state walks forward with the feed: a rewrite's delete side
-        # must subtract the vectors visible just BEFORE it (see
-        # docstring). live/txns ride along only to feed _apply_action.
-        # The start state is needed ONLY when the range rewrites files —
-        # an append/dv-only range feeds even after the history BEFORE
-        # start_version was expired (each dv commit is self-contained).
-        live, txns, dvs = {}, {}, {}
-        if start_version >= 0:
-            try:
-                _m, live, txns, dvs = self._state_at(start_version)
-            except VersionExpiredError:
-                for v, actions in commits.items():
-                    op = next(
-                        (a["commit"]["op"] for a in actions if "commit" in a),
-                        "?",
-                    )
-                    if op != "optimize" and any("remove" in a for a in actions):
-                        raise VersionExpiredError(
-                            f"feed over ({start_version}, {end}] contains a "
-                            f"rewrite at v{v} whose delete side needs the "
-                            f"deletion-vector state at v{start_version}, "
-                            "which has been expired"
-                        ) from None
+        s = self._snapshot(end)
+        cols = s.schema.fieldNames()
         parts: list[DataFrame] = []
-
-        def _stamp(df: DataFrame, ctype: str, v: int) -> None:
+        for v, kind, rels, dvs in self._feed(start_version, end):
+            if kind == "dv_delete":
+                df = self._positions(
+                    s.schema, s.mapping, rels, self._dv_frame(dvs, rels), "left_semi"
+                )
+            else:
+                df = self._read_files(s.schema, rels, dvs, s.mapping)
             parts.append(
                 df.select(*cols)
-                .withColumn("_change_type", F.lit(ctype))
+                .withColumn(
+                    "_change_type", F.lit("insert" if kind == "insert" else "delete")
+                )
                 .withColumn("_commit_version", F.lit(v).cast("long"))
             )
-
-        for v in range(start_version + 1, end + 1):
-            actions = commits[v]
-            op = next(
-                (a["commit"]["op"] for a in actions if "commit" in a), "?"
-            )
-            adds = [a["add"]["path"] for a in actions if "add" in a]
-            removes = [a["remove"]["path"] for a in actions if "remove" in a]
-            dv_acts = [a["dv"] for a in actions if "dv" in a]
-            if op != "optimize":
-                # deletes first: within one version the retraction
-                # applies before the re-insert (ordering is cosmetic —
-                # multiset replay is order-free — but keeps the feed
-                # readable)
-                if removes:
-                    _stamp(
-                        self._read_files(schema, removes, dvs, mapping),
-                        "delete",
-                        v,
-                    )
-                for d in dv_acts:
-                    dvrel = self.spark.read.schema(self._DV_SCHEMA).parquet(
-                        *[os.path.join(self.root, p) for p in d["paths"]]
-                    )
-                    hit = (
-                        self.spark.read.schema(phys)
-                        .parquet(
-                            *[
-                                os.path.join(self.root, f)
-                                for f in sorted(d["files"])
-                            ]
-                        )
-                        .withColumn("__rel", self._rel_path_col())
-                        .withColumn("__pos", F.col("_metadata.row_index"))
-                        .join(
-                            dvrel.select(
-                                F.col("path").alias("__rel"),
-                                F.col("pos").alias("__pos"),
-                            ),
-                            ["__rel", "__pos"],
-                            "left_semi",
-                        )
-                        .select(*logical)
-                    )
-                    _stamp(hit, "delete", v)
-                if adds:
-                    _stamp(
-                        self.spark.read.schema(phys)
-                        .parquet(
-                            *[os.path.join(self.root, r) for r in sorted(adds)]
-                        )
-                        .select(*logical),
-                        "insert",
-                        v,
-                    )
-            for action in actions:
-                self._apply_action(action, {}, live, txns, dvs)
         if not parts:
             out_schema = T.StructType(
-                list(schema.fields)
+                list(s.schema.fields)
                 + [
                     T.StructField("_change_type", T.StringType(), False),
                     T.StructField("_commit_version", T.LongType(), False),
@@ -917,6 +926,59 @@ class TxTable:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def _feed(self, start: int, end: int):
+        """The change feed's commit walk over ``(start, end]``, shared by
+        :meth:`changes` and the streaming CDC source. For every commit
+        but ``optimize`` (dataChange=false) it yields ``(version, kind,
+        rels, dvs)`` slices in feed order — deletes first: within one
+        version the retraction applies before the re-insert (ordering
+        is cosmetic — multiset replay is order-free — but keeps the
+        feed readable):
+
+        - ``delete``: the files the commit removed, with ``dvs`` the
+          vectors live just BEFORE it — the rows it removed as visible;
+        - ``dv_delete``: the files one ``dv`` action deletes from, with
+          ``dvs`` holding only that action — the rows it newly deleted;
+        - ``insert``: the files the commit added (``dvs`` empty).
+
+        The DV state walks forward with the feed, so a consumer uses
+        each slice before asking for the next. The start state is
+        needed ONLY when the range removes files — an append/dv-only
+        range feeds even after the history BEFORE ``start`` was expired
+        (each dv action is self-contained)."""
+        commits = {
+            v: self._parse_commit(v) for v in range(start + 1, end + 1)
+        }  # raises VersionExpiredError if the range itself is gone
+        live, txns, dvs = {}, {}, {}
+        if start >= 0:
+            try:
+                _m, live, txns, dvs = self._state_at(start)
+            except VersionExpiredError:
+                for v, actions in commits.items():
+                    if self._op(actions) != "optimize" and any(
+                        "remove" in a for a in actions
+                    ):
+                        raise VersionExpiredError(
+                            f"feed over ({start}, {end}] contains a "
+                            f"rewrite at v{v} whose delete side needs the "
+                            f"deletion-vector state at v{start}, "
+                            "which has been expired"
+                        ) from None
+        for v, actions in commits.items():
+            if self._op(actions) != "optimize":
+                removes = [a["remove"]["path"] for a in actions if "remove" in a]
+                if removes:
+                    yield v, "delete", removes, dvs
+                for a in actions:
+                    if "dv" in a:
+                        d = a["dv"]
+                        yield v, "dv_delete", sorted(d["files"]), {d["paths"][0]: d}
+                adds = [a["add"]["path"] for a in actions if "add" in a]
+                if adds:
+                    yield v, "insert", adds, {}
+            for action in actions:
+                self._apply_action(action, {}, live, txns, dvs)
 
     # -- write path -------------------------------------------------------
 
@@ -984,9 +1046,7 @@ class TxTable:
         guarded = our_removes | set(dv_targets)
         for v in range(read_version + 1, latest + 1):
             actions = self._parse_commit(v)
-            their_op = next(
-                (a["commit"].get("op") for a in actions if "commit" in a), "?"
-            )
+            their_op = self._op(actions)
             for a in actions:
                 if "meta" in a:
                     # metadata serializes against EVERYTHING: any txn
@@ -1299,84 +1359,70 @@ class TxTable:
         wants ``rewrite`` (DVs leave the bytes in place)."""
         if mode not in ("rewrite", "dv"):
             raise ValueError(f"mode must be rewrite|dv, got {mode!r}")
-        rv = self.version()
-        meta, live, _, dvs = self._state_at(rv)
-        mapping = self._col_mapping(meta)
-        (pcol,) = self._to_phys(meta, [col])
-        hit = [a for a in live.values() if _overlaps(a["stats"], pcol, lo, hi)]
+        s = self._snapshot()
+        pcol, hit = s.overlapping(col, lo, hi)
         if not hit:
-            return rv
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
-        hit_rels = [a["path"] for a in hit]
-        matched = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-        predicate = {pcol: (lo, hi)}
+            return s.version
+        matched = _between(col, lo, hi)
         if mode == "dv":
-            matched_phys = (F.col(pcol) >= F.lit(lo)) & (
-                F.col(pcol) <= F.lit(hi)
-            )
-            return self._delete_dv(
-                rv,
-                self._phys_struct(schema, mapping),
-                hit_rels,
-                dvs,
-                matched_phys,
-                predicate,
-            )
-        keep = self._read_files(schema, hit_rels, dvs, mapping).filter(
-            ~F.coalesce(matched, F.lit(False))
-        )
-        adds = self._write_stage(keep, meta["stat_cols"], mapping)
+            return self._commit_dv("delete_dv", s, hit, matched, {pcol: (lo, hi)})
+        keep = self._read_files(s.schema, hit, s.dvs, s.mapping).filter(~matched)
+        adds = self._write_stage(keep, s.meta["stat_cols"], s.mapping)
         return self._commit(
-            "delete",
-            adds,
-            hit_rels,
-            predicate,
-            read_version=rv,
+            "delete", adds, hit, {pcol: (lo, hi)}, read_version=s.version
         )
 
-    def _delete_dv(
+    def _commit_dv(
         self,
-        rv: int,
-        schema: T.StructType,
-        hit_rels: list[str],
-        dvs: dict,
+        op: str,
+        s: _Snapshot,
+        rels: list[str],
         matched,
         predicate: dict,
+        assign=None,
     ) -> int:
-        """Stage the matched ``(path, pos)`` pairs and commit them as a
-        ``dv`` action. Positions already covered by a live DV are
-        subtracted first — re-deleting the same range is a no-op (no
-        commit), and per-file ``n_deleted`` accounting stays exact."""
-        pos = (
-            self.spark.read.schema(schema)
-            .parquet(*[os.path.join(self.root, r) for r in sorted(hit_rels)])
-            .filter(F.coalesce(matched, F.lit(False)))
-            .select(
-                self._rel_path_col().alias("path"),
-                F.col("_metadata.row_index").cast("bigint").alias("pos"),
+        """The merge-on-read commit of ``delete_where`` and
+        ``update_where`` ``mode="dv"``: the ``(path, pos)`` pairs of the
+        VISIBLE rows of ``rels`` that ``matched`` selects are staged as a
+        sidecar and committed as ONE ``dv`` action. ``assign`` (update)
+        maps those rows to their new values, staged as data files of
+        the same commit; a delete stages none. Positions a live vector
+        already covers are subtracted first — re-deleting a range is a
+        no-op (no commit), and per-file ``n_deleted`` stays exact."""
+        from ..checkpointing import release, truncate_lineage
+
+        hit = self._positions(
+            s.schema, s.mapping, rels, self._dv_frame(s.dvs, rels)
+        ).filter(matched)
+        if assign is not None:
+            # one evaluation feeds both stages; matched-row positions are
+            # O(matched rows) = data-sized in the worst case → serialized
+            hit = truncate_lineage(hit, footprint="data")
+        try:
+            entries = self._write_stage(
+                hit.select(F.col("__rel").alias("path"), F.col("__pos").alias("pos")),
+                [],
             )
-        )
-        existing = self._dv_frame(dvs, restrict=set(hit_rels))
-        if existing is not None:
-            pos = pos.join(existing, ["path", "pos"], "left_anti")
-        entries = self._write_stage(pos, [])
-        if not entries:
-            return rv  # nothing newly deleted; orphan stage → vacuum
+            if not entries:
+                return s.version  # nothing newly deleted; orphan stage → vacuum
+            adds = (
+                []
+                if assign is None
+                else self._write_stage(assign(hit), s.meta["stat_cols"], s.mapping)
+            )
+        finally:
+            if assign is not None:
+                release(hit)
         dv_paths = sorted(e["path"] for e in entries)
-        counts = (
-            self.spark.read.schema(self._DV_SCHEMA)
-            .parquet(*[os.path.join(self.root, p) for p in dv_paths])
-            .groupBy("path")
-            .count()
-            .collect()
-        )  # bounded: one row per touched FILE (driver metadata, like adds)
+        # bounded: one row per touched FILE (driver metadata, like adds)
+        counts = self._read_dv(dv_paths).groupBy("path").count().collect()
         files = {r["path"]: r["count"] for r in counts}
         return self._commit(
-            "delete_dv",
-            [],
+            op,
+            adds,
             [],
             predicate,
-            read_version=rv,
+            read_version=s.version,
             dv={
                 "paths": dv_paths,
                 "files": files,
@@ -1415,29 +1461,19 @@ class TxTable:
         would copy all 10k files; dv mode touches none of them."""
         if mode not in ("rewrite", "dv"):
             raise ValueError(f"mode must be rewrite|dv, got {mode!r}")
-        rv = self.version()
-        meta, live, _, dvs = self._state_at(rv)
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
-        names = set(schema.fieldNames())
-        bad = sorted(set(assignments) - names)
+        s = self._snapshot()
+        cols = s.schema.fieldNames()
+        bad = sorted(set(assignments) - set(cols))
         if bad:
-            raise ValueError(f"unknown update columns {bad} (have {sorted(names)})")
+            raise ValueError(f"unknown update columns {bad} (have {sorted(cols)})")
         exprs = {
             k: (F.expr(v) if isinstance(v, str) else v)
             for k, v in assignments.items()
         }
-        mapping = self._col_mapping(meta)
-        (pcol,) = self._to_phys(meta, [col])
-        hit = [a for a in live.values() if _overlaps(a["stats"], pcol, lo, hi)]
+        pcol, hit = s.overlapping(col, lo, hi)
         if not hit:
-            return rv
-        hit_rels = [a["path"] for a in hit]
-        matched = F.coalesce(
-            (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)),
-            F.lit(False),
-        )
-        predicate = {pcol: (lo, hi)}
-        cols = [f.name for f in schema.fields]
+            return s.version
+        matched = _between(col, lo, hi)
 
         def _assigned(df: DataFrame, cond) -> DataFrame:
             # ONE projection: every assignment reads the ORIGINAL row
@@ -1449,83 +1485,26 @@ class TxTable:
                     for k, e in exprs.items()
                 }
             )
-            return self._conform(out.select(*cols), meta)
+            return self._conform(out.select(*cols), s.meta)
 
-        if mode == "rewrite":
-            src = self._read_files(schema, hit_rels, dvs, mapping)
-            adds = self._write_stage(
-                _assigned(src, matched), meta["stat_cols"], mapping
+        if mode == "dv":
+            # positions of the matched VISIBLE rows become a deletion
+            # vector; their updated values become new data files — both
+            # under one atomic commit
+            return self._commit_dv(
+                "update_dv",
+                s,
+                hit,
+                matched,
+                {pcol: (lo, hi)},
+                lambda rows: _assigned(rows, F.lit(True)),
             )
-            return self._commit(
-                "update", adds, hit_rels, predicate, read_version=rv
-            )
-        # merge-on-read: positions of the matched VISIBLE rows become a
-        # deletion vector; their updated values become new data files —
-        # both under one atomic commit.
-        m = mapping or {}
-        logical = [
-            F.col(m.get(f.name, f.name)).alias(f.name)
-            for f in schema.fields
-        ]
-        raw = (
-            self.spark.read.schema(self._phys_struct(schema, mapping))
-            .parquet(*[os.path.join(self.root, r) for r in sorted(hit_rels)])
-            .withColumn("__rel", self._rel_path_col())
-            .withColumn(
-                "__pos", F.col("_metadata.row_index").cast("bigint")
-            )
-            .select(*logical, "__rel", "__pos")
-            .filter(matched)
+        src = self._read_files(s.schema, hit, s.dvs, s.mapping)
+        adds = self._write_stage(
+            _assigned(src, matched), s.meta["stat_cols"], s.mapping
         )
-        existing = self._dv_frame(dvs, restrict=set(hit_rels))
-        if existing is not None:
-            raw = raw.join(
-                existing.select(
-                    F.col("path").alias("__rel"), F.col("pos").alias("__pos")
-                ),
-                ["__rel", "__pos"],
-                "left_anti",
-            )
-        from ..checkpointing import release, truncate_lineage
-
-        # one evaluation feeds both branches; matched-row positions are
-        # O(matched rows) = data-sized in the worst case → serialized
-        raw = truncate_lineage(raw, footprint="data")
-        try:
-            dv_entries = self._write_stage(
-                raw.select(
-                    F.col("__rel").alias("path"), F.col("__pos").alias("pos")
-                ),
-                [],
-            )
-            if not dv_entries:
-                return rv  # nothing visible matched; orphan stages → vacuum
-            adds = self._write_stage(
-                _assigned(raw, F.lit(True)), meta["stat_cols"], mapping
-            )
-        finally:
-            release(raw)
-        dv_paths = sorted(e["path"] for e in dv_entries)
-        counts = (
-            self.spark.read.schema(self._DV_SCHEMA)
-            .parquet(*[os.path.join(self.root, p) for p in dv_paths])
-            .groupBy("path")
-            .count()
-            .collect()
-        )
-        files = {r["path"]: r["count"] for r in counts}
         return self._commit(
-            "update_dv",
-            adds,
-            [],
-            predicate,
-            read_version=rv,
-            dv={
-                "paths": dv_paths,
-                "files": files,
-                "num_deleted": sum(files.values()),
-            },
-            dv_targets=sorted(files),
+            "update", adds, hit, {pcol: (lo, hi)}, read_version=s.version
         )
 
     def dv_stats(self) -> dict[str, int]:
@@ -1567,51 +1546,29 @@ class TxTable:
         100 TB: cost is O(files overlapping the slice) — with
         date-clustered layout (ingest order or ``optimize(cluster_by)``)
         a one-day replace touches one day's files, never the table."""
-        rv = self.version()
-        meta, live, _, dvs = self._state_at(rv)
-        mapping = self._col_mapping(meta)
-        (pcol,) = self._to_phys(meta, [col])
-        incoming = self._conform(df, meta)
-        inside = F.coalesce(
-            (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)),
-            F.lit(False),
-        )
+        s = self._snapshot()
+        pcol, hit = s.overlapping(col, lo, hi)
+        inside = _between(col, lo, hi)
+        incoming = self._conform(df, s.meta)
         first = incoming.schema.fields[0]
         msg = (
             f"replace_where: incoming row outside "
             f"{col!r} BETWEEN {lo!r} AND {hi!r}"
         )
-        guarded = incoming.withColumn(
+        new_data = incoming.withColumn(
             first.name,
             F.when(
                 ~inside, F.raise_error(F.lit(msg)).cast(first.dataType)
             ).otherwise(F.col(first.name)),
         )
-        hit_rels = sorted(
-            a["path"]
-            for a in live.values()
-            if _overlaps(a["stats"], pcol, lo, hi)
-        )
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
-        if hit_rels:
-            keep = self._read_files(schema, hit_rels, dvs, mapping).filter(
-                ~F.coalesce(
-                    (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)),
-                    F.lit(False),
-                )
-            )
-            new_data = keep.unionByName(guarded)
-        else:
-            new_data = guarded
-        adds = self._write_stage(new_data, meta["stat_cols"], mapping)
-        if not adds and not hit_rels:
-            return rv  # empty slice replaced with nothing — no commit
+        if hit:
+            keep = self._read_files(s.schema, hit, s.dvs, s.mapping)
+            new_data = keep.filter(~inside).unionByName(new_data)
+        adds = self._write_stage(new_data, s.meta["stat_cols"], s.mapping)
+        if not adds and not hit:
+            return s.version  # empty slice replaced with nothing — no commit
         return self._commit(
-            "replace",
-            adds,
-            hit_rels,
-            {pcol: (lo, hi)},
-            read_version=rv,
+            "replace", adds, hit, {pcol: (lo, hi)}, read_version=s.version
         )
 
     def merge_upsert(
@@ -1649,41 +1606,45 @@ class TxTable:
         merge still records its watermark with a data-free commit
         (:meth:`mark_stream_batch`, whose result it returns), so a
         sink whose batch folds to zero rows is never left stale. The
-        row count comes from the bounds aggregate the merge runs
-        anyway — no extra Spark job."""
+        row count is observed on the job that materializes ``updates``,
+        so an empty merge starts that one Spark job and no other."""
         if stream_txn is not None:
             last = self.last_stream_batch(stream_txn[0])
             if last is not None and stream_txn[1] <= last:
                 return None
-        rv = self.version()
-        meta, live, _, dvs = self._state_at(rv)
-        if key not in meta["stat_cols"]:
+        s = self._snapshot()
+        if key not in s.meta["stat_cols"]:
             raise ValueError(
-                f"merge key {key!r} is not a stat column {meta['stat_cols']} "
+                f"merge key {key!r} is not a stat column {s.meta['stat_cols']} "
                 "— keyed merges need the key range index"
             )
         # ONE evaluation of the (possibly expensive) updates pipeline —
-        # it feeds three consumers (bounds probe, anti-join build, the
-        # rewrite union); without the cut each would re-execute it
+        # it feeds three consumers (duplicate-key probe, anti-join build,
+        # the rewrite union); without the cut each would re-execute it.
+        # The key bounds and counts ride that job as an Observation.
         from ..checkpointing import release, truncate_lineage
 
+        obs = Observation()
         # the update relation is data-sized in general → serialized
-        updates = truncate_lineage(self._conform(updates, meta), footprint="data")
-        try:
-            bounds = updates.agg(
+        updates = truncate_lineage(
+            self._conform(updates, s.meta).observe(
+                obs,
                 F.min(key).alias("lo"),
                 F.max(key).alias("hi"),
-                F.count("*").alias("n"),
+                F.count(F.lit(1)).alias("n"),
                 F.count(key).alias("n_key"),
-                F.countDistinct(key).alias("n_distinct"),
-            ).collect()[0]
+            ),
+            footprint="data",
+        )
+        try:
+            bounds = obs.get
             if bounds["n"] == 0:
                 if stream_txn is None:
-                    return rv
+                    return s.version
                 return self.mark_stream_batch(*stream_txn)
             if bounds["n_key"] != bounds["n"]:
                 raise ValueError("merge_upsert: NULL update keys")
-            if bounds["n_distinct"] != bounds["n"]:
+            if updates.agg(F.countDistinct(key)).collect()[0][0] != bounds["n"]:
                 raise ValueError(
                     "merge_upsert: duplicate update keys — dedupe (e.g. "
                     "operators.cleaning.dedup_latest) before merging"
@@ -1702,34 +1663,25 @@ class TxTable:
             # replaces matched keys), the stats merely bound the IO —
             # so it joins the rewrite set conservatively, same contract
             # as _overlaps
-            mapping = self._col_mapping(meta)
-            (pkey,) = self._to_phys(meta, [key])
-            hit = [
-                a for a in live.values() if _overlaps(a["stats"], pkey, lo, hi)
-            ]
-            schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+            pkey, hit = s.overlapping(key, lo, hi)
+            new_data = updates
             if hit:
                 # DVs applied: the rewrite must not resurrect rows a
                 # merge-on-read delete already removed
-                src = self._read_files(
-                    schema, [a["path"] for a in hit], dvs, mapping
-                )
-                survivors = src.join(
-                    F.broadcast(updates.select(key)), key, "left_anti"
-                )
+                survivors = self._read_files(
+                    s.schema, hit, s.dvs, s.mapping
+                ).join(F.broadcast(updates.select(key)), key, "left_anti")
                 new_data = survivors.unionByName(updates)
-            else:
-                new_data = updates
-            adds = self._write_stage(new_data, meta["stat_cols"], mapping)
+            adds = self._write_stage(new_data, s.meta["stat_cols"], s.mapping)
         finally:
             release(updates)  # staged parquet is durable; free the blocks
         try:
             return self._commit(
                 "merge",
                 adds,
-                [a["path"] for a in hit],
+                hit,
                 {pkey: (lo, hi)},
-                read_version=rv,
+                read_version=s.version,
                 stream_txn=stream_txn,
             )
         except _AlreadyCommitted:
@@ -1755,22 +1707,18 @@ class TxTable:
         concurrent remove of an input conflicts."""
         if cluster_by is not None and zorder_by is not None:
             raise ValueError("pass cluster_by OR zorder_by, not both")
-        rv = self.version()
-        meta, live, _, dvs = self._state_at(rv)
-        small = [a for a in live.values() if a["size"] < small_file_bytes]
+        s = self._snapshot()
+        small = sorted(p for p, a in s.live.items() if a["size"] < small_file_bytes)
         if len(small) < 2:
-            return rv
+            return s.version
         # DVs applied: compaction MATERIALIZES merge-on-read deletions
         # (the rewrite drops DV'd rows; the remove actions then retire
         # the vectors in replay) — the public formats' "purge" behavior.
         # Still dataChange=false: the VISIBLE row multiset is unchanged.
-        src = self._read_files(
-            T.StructType.fromJson(json.loads(meta["schema_json"])),
-            [a["path"] for a in small],
-            dvs,
-            self._col_mapping(meta),
+        src = self._read_files(s.schema, small, s.dvs, s.mapping)
+        n_out = max(
+            1, math.ceil(sum(s.live[p]["size"] for p in small) / target_file_bytes)
         )
-        n_out = max(1, math.ceil(sum(a["size"] for a in small) / target_file_bytes))
         if zorder_by is not None:
             from . import layout as _layout
 
@@ -1786,12 +1734,8 @@ class TxTable:
             )
         else:
             src = src.coalesce(n_out)
-        adds = self._write_stage(
-            src, meta["stat_cols"], self._col_mapping(meta)
-        )
-        return self._commit(
-            "optimize", adds, [a["path"] for a in small], None, read_version=rv
-        )
+        adds = self._write_stage(src, s.meta["stat_cols"], s.mapping)
+        return self._commit("optimize", adds, small, None, read_version=s.version)
 
     def purge_deletes(
         self,
@@ -1807,37 +1751,21 @@ class TxTable:
         rewrites, visible row multiset unchanged (dataChange=false →
         invisible to the change feed), concurrent appends untouched,
         concurrent removes of an input conflict."""
-        rv = self.version()
-        meta, live, _, dvs = self._state_at(rv)
-        debt = self.dv_stats()
-        targets = [
-            live[p]
-            for p, n in debt.items()
-            if n >= min_dv_rows and p in live
-        ]
-        if not targets:
-            return rv
-        src = self._read_files(
-            T.StructType.fromJson(json.loads(meta["schema_json"])),
-            [a["path"] for a in targets],
-            dvs,
-            self._col_mapping(meta),
+        s = self._snapshot()
+        targets = sorted(
+            p for p, n in self.dv_stats().items() if n >= min_dv_rows and p in s.live
         )
+        if not targets:
+            return s.version
+        src = self._read_files(s.schema, targets, s.dvs, s.mapping)
         n_out = max(
-            1,
-            math.ceil(
-                sum(a["size"] for a in targets) / target_file_bytes
-            ),
+            1, math.ceil(sum(s.live[p]["size"] for p in targets) / target_file_bytes)
         )
         adds = self._write_stage(
-            src.coalesce(n_out), meta["stat_cols"], self._col_mapping(meta)
+            src.coalesce(n_out), s.meta["stat_cols"], s.mapping
         )
         return self._commit(
-            "optimize",
-            adds,
-            [a["path"] for a in targets],
-            None,
-            read_version=rv,
+            "optimize", adds, targets, None, read_version=s.version
         )
 
     def auto_maintain(
@@ -1974,7 +1902,7 @@ class TxTable:
         rv = self.version()
         meta, live, _, _ = self._state_at(rv)
         phys = self._to_phys(meta, [col])[0]
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+        schema = self._schema(meta)
         field = next((x for x in schema.fields if x.name == col), None)
         if field is None:
             raise ValueError(
@@ -2099,7 +2027,7 @@ class TxTable:
         migration job, not a one-line alter."""
         rv = self.version()
         meta, _, _, _ = self._state_at(rv)
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+        schema = self._schema(meta)
         if name in schema.fieldNames():
             raise ValueError(f"column {name!r} already exists")
         self._check_reserved([name])
@@ -2161,7 +2089,7 @@ class TxTable:
         old name make the rename refuse loudly (drop/re-add them)."""
         rv = self.version()
         meta, _, _, _ = self._state_at(rv)
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+        schema = self._schema(meta)
         if old not in schema.fieldNames():
             raise ValueError(
                 f"no column {old!r} (have {schema.fieldNames()})"
@@ -2216,7 +2144,7 @@ class TxTable:
         column, and refuses to drop the last column."""
         rv = self.version()
         meta, _, _, _ = self._state_at(rv)
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+        schema = self._schema(meta)
         if name not in schema.fieldNames():
             raise ValueError(
                 f"no column {name!r} (have {schema.fieldNames()})"
@@ -2569,8 +2497,7 @@ class TxTable:
                         kv += [F.lit(k), F.lit(_abs(k))]
             pmap = F.create_map(*kv)
             rows = (
-                self.spark.read.schema(self._DV_SCHEMA)
-                .parquet(*[os.path.join(self.root, p) for p in old])
+                self._read_dv(old)
                 .select(pmap[F.col("path")].alias("path"), "pos")
                 .filter(F.col("path").isNotNull())
             )
@@ -2615,7 +2542,7 @@ class TxTable:
         required (loud on drift — the schemas.py discipline), order
         normalized, exact-type equality enforced (no silent casts: a
         double arriving for a long column is drift, not data)."""
-        schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+        schema = self._schema(meta)
         want = {f.name: f.dataType for f in schema.fields}
         have = {f.name: f.dataType for f in df.schema.fields}
         if set(want) != set(have):
@@ -2747,9 +2674,7 @@ if HAVE_DATASOURCE_API:
             out: list[_FeedSlice] = []
             for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
                 actions = t._parse_commit(v)
-                op = next(
-                    (a["commit"]["op"] for a in actions if "commit" in a), "?"
-                )
+                op = t._op(actions)
                 if op == "optimize":
                     continue
                 if any("remove" in a or "dv" in a for a in actions):
@@ -2773,92 +2698,29 @@ if HAVE_DATASOURCE_API:
         def _cdf_partitions(self, start: dict, end: dict):
             """STREAMING CDC: the batch carries insert AND delete rows
             (same retraction semantics as TxTable.changes, same replay
-            guarantee) — planned entirely from driver-side log metadata.
-            A rewrite's delete side needs the deletion-vector state just
-            before it, walked forward exactly like the batch CDF; each
-            slice ships the sidecar paths its executor task must consult
-            (no executor log access)."""
+            guarantee) — planned entirely from driver-side log metadata
+            by the commit walk the batch CDF uses (``TxTable._feed``),
+            one slice per file; each slice ships the sidecar paths its
+            executor task must consult (no executor log access)."""
             t = TxTable._headless(self.root)
-            start_v, end_v = int(start["version"]), int(end["version"])
-            commits = {
-                v: t._parse_commit(v) for v in range(start_v + 1, end_v + 1)
-            }
-            live: dict = {}
-            txns: dict = {}
-            dvs: dict = {}
-            if start_v >= 0:
-                try:
-                    _m, live, txns, dvs = t._state_at(start_v)
-                except VersionExpiredError:
-                    for v, actions in commits.items():
-                        op = next(
-                            (
-                                a["commit"]["op"]
-                                for a in actions
-                                if "commit" in a
-                            ),
-                            "?",
-                        )
-                        if op != "optimize" and any(
-                            "remove" in a for a in actions
-                        ):
-                            raise
-            out: list[_FeedSlice] = []
-            for v in range(start_v + 1, end_v + 1):
-                actions = commits[v]
-                op = next(
-                    (a["commit"]["op"] for a in actions if "commit" in a), "?"
+            return [
+                _FeedSlice(
+                    os.path.join(self.root, rel),
+                    v,
+                    kind,
+                    rel,
+                    tuple(
+                        os.path.join(self.root, p)
+                        for e in dvs.values()
+                        if rel in e["files"]
+                        for p in e["paths"]
+                    ),
                 )
-                if op != "optimize":
-                    for a in actions:
-                        if "remove" not in a:
-                            continue
-                        rel = a["remove"]["path"]
-                        sidecars = tuple(
-                            os.path.join(self.root, p)
-                            for e in dvs.values()
-                            if rel in e["files"]
-                            for p in e["paths"]
-                        )
-                        out.append(
-                            _FeedSlice(
-                                os.path.join(self.root, rel),
-                                v,
-                                "delete",
-                                rel,
-                                sidecars,
-                            )
-                        )
-                    for a in actions:
-                        if "dv" not in a:
-                            continue
-                        d = a["dv"]
-                        paths = tuple(
-                            os.path.join(self.root, p) for p in d["paths"]
-                        )
-                        for rel in sorted(d["files"]):
-                            out.append(
-                                _FeedSlice(
-                                    os.path.join(self.root, rel),
-                                    v,
-                                    "dv_delete",
-                                    rel,
-                                    paths,
-                                )
-                            )
-                    out.extend(
-                        _FeedSlice(
-                            os.path.join(self.root, a["add"]["path"]),
-                            v,
-                            "insert",
-                            a["add"]["path"],
-                        )
-                        for a in actions
-                        if "add" in a
-                    )
-                for action in actions:
-                    t._apply_action(action, {}, live, txns, dvs)
-            return out
+                for v, kind, rels, dvs in t._feed(
+                    int(start["version"]), int(end["version"])
+                )
+                for rel in rels
+            ]
 
         def read(self, partition: _FeedSlice):
             # Executor-side: one parquet file → Arrow batches, conformed
@@ -2944,8 +2806,7 @@ if HAVE_DATASOURCE_API:
 
         def schema(self):
             t = TxTable._headless(self.options["root"])
-            meta, _, _, _ = t._state_at(t.version())
-            schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+            schema = t._snapshot().schema
             if self.options.get("mode", "append") == "cdf":
                 # streaming CDC: the batch CDF's exact row shape
                 schema = T.StructType(
@@ -2968,8 +2829,7 @@ if HAVE_DATASOURCE_API:
             # parquet columns up by PHYSICAL name (column mapping)
             r._arrow_schema = to_arrow_schema(schema)
             t = TxTable._headless(self.options["root"])
-            meta, _, _, _ = t._state_at(t.version())
-            r._phys_map = TxTable._col_mapping(meta) or {}
+            r._phys_map = t._snapshot().mapping or {}
             return r
 
 

@@ -124,3 +124,34 @@ def test_global_window_allowlist_is_tight(spark):
         assert plans.inspect.unpartitioned_window_count(df) > 0, (
             f"{name}: allowlisted but clean — remove the entry"
         )
+
+
+def test_pushed_filters_keep_bracketed_lists(spark, tmp_path):
+    """A pushed ``In(path, [...])`` carries brackets of its own (txlog
+    DV reads push one): the pushed list comes back whole, with the
+    filters on both sides of it. A scan that prints no PushedFilters
+    line (a txlog DV read's data scan) still gets its empty entry, so
+    the lists stay aligned with the read schemas."""
+    from pyspark.sql import functions as F
+
+    from data_mastery_pipeline_spark.sources.txlog import TxTable
+
+    t = TxTable.create(
+        spark, str(tmp_path / "tx"), spark.range(6).selectExpr("id as k").coalesce(1)
+    )
+    t.delete_where("k", 2, 3, mode="dv")
+    data_scan, dv_scan = plans.read_schema_columns(t.read())
+    assert "k" in data_scan and dv_scan == ["path", "pos"]
+    pushed = plans.pushed_filters(t.read())
+    assert len(pushed) == 2 and pushed[0] == "" and "path" in pushed[1]
+
+    root = str(tmp_path / "t")
+    spark.range(4).selectExpr("cast(id as string) as path", "id as v").write.parquet(
+        root
+    )
+    df = spark.read.parquet(root).filter(
+        F.col("path").isin("a", "b") & (F.col("v") > 0)
+    )
+    assert plans.pushed_filters(df) == [
+        "IsNotNull(v), In(path, [a,b]), GreaterThan(v,0)"
+    ]
